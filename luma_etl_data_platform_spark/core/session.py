@@ -87,3 +87,15 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def inherit_thread_target(spark: SparkSession, fn):
+    """``fn`` wrapped to run in a worker thread under the caller's job
+    group, description and scheduler pool (pyspark's
+    ``inheritable_thread_target``). With pinned-thread mode off
+    (``PYSPARK_PIN_THREAD=false``) pyspark hands its argument back
+    unchanged — the session, not a decorator — and there are no
+    per-thread properties to inherit, so ``fn`` runs as is."""
+    from pyspark import inheritable_thread_target
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)

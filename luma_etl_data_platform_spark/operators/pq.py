@@ -169,16 +169,16 @@ def pq_trained_codebook_df(spark: SparkSession, df: DataFrame,
     # the seed collect and the sub-vector checkpoint are INDEPENDENT
     # corpus scans — overlap them (optimization guide §2.6) instead of
     # idling through each job's tail; results are unchanged (the seed
-    # frame is a LocalRelation either way). inheritable_thread_target
+    # frame is a LocalRelation either way). inherit_thread_target
     # propagates the caller's job group/description/pool into the
     # worker so cancellation and UI labels still reach the seed job
     # (ADVICE r11).
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
+    from ..core.session import inherit_thread_target
     with ThreadPoolExecutor(max_workers=1) as pool:
         fut_seeds = pool.submit(
-            inheritable_thread_target(spark)(pq_codebook_df), spark, df,
+            inherit_thread_target(spark, pq_codebook_df), spark, df,
             id_col, vec_col, dim, m_sub, k_codes)
         subs = (df.select(_subspaces(qv, dim, m_sub).alias("_ss"))
                 .localCheckpoint(eager=True))  # reused every round

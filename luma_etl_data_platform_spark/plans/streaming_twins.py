@@ -769,12 +769,13 @@ def stream_cdf_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     _marks.append(("commits", _time.monotonic()))
 
     def _apply(changes: DataFrame, version: int) -> None:
-        # one pass over the batch's file diff: checkpoint the batch
-        # (both merge consumers reuse it instead of re-reading the
-        # touched files) and probe the change kinds in ONE job — the
-        # former ups.limit(1).count() / dels.limit(1).count() pair
-        # re-ran the diff once per probe (guide §1.2: don't compute
-        # things twice). The mirror is a keyed latest-state sink, so
+        # one pass over the batch's file diff: read_changes is a lazy
+        # plan, so checkpoint the batch here (the kind probe and both
+        # merge consumers reuse it instead of re-running the diff)
+        # and probe the change kinds in ONE job — the former
+        # ups.limit(1).count() / dels.limit(1).count() pair re-ran the
+        # diff once per probe (guide §1.2: don't compute things
+        # twice). The mirror is a keyed latest-state sink, so
         # the feed drains with coalesce_versions=True (round-12,
         # guide §1.2/§3): one net-diff batch and ONE set of mirror
         # DMLs per run of consecutive versions instead of a full

@@ -1410,14 +1410,14 @@ def ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged (round 12)
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
+    from ..core.session import inherit_thread_target
 
     def _exact():
         return (S.cosine_topk(corpus, query, k=10).select("vec_id")
                 .localCheckpoint(eager=True))
 
     with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_exact = pool.submit(inheritable_thread_target(spark)(_exact))
+        fut_exact = pool.submit(inherit_thread_target(spark, _exact))
         top = (PQ.pq_topk(corpus, query, k=10, codebook="trained")
                .localCheckpoint(eager=True))  # 2 consumers: out + recall
         exact = fut_exact.result()

@@ -71,7 +71,7 @@ import time
 import uuid
 from urllib.parse import unquote
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -445,6 +445,23 @@ def _scoped(fn):
     def wrapper(spark, table_path, *a, **k):
         with _read_scope(table_path):
             return fn(spark, table_path, *a, **k)
+    return wrapper
+
+
+def _pinned_attempt(fn):
+    """Run ONE attempt of a committing op ``fn(spark, table_path, ...)``
+    in its own pinned scope: the attempt's dozen-plus declaration
+    derivations share a single commit-log listing (see
+    ``_PINNED_COMMITS``); a CAS loss retries outside the scope and
+    re-derives everything."""
+
+    @functools.wraps(fn)
+    def wrapper(spark, table_path, *a, **k):
+        _pin_snapshot(table_path)
+        try:
+            return fn(spark, table_path, *a, **k)
+        finally:
+            _unpin_snapshot(table_path)
     return wrapper
 
 
@@ -1128,8 +1145,14 @@ def _dv_overlay(spark: SparkSession, table_path: str,
     rels = _dv_rels(spark, table_path, version)
     if not rels:
         return None
-    root = table_path.rstrip("/")
-    return (spark.read.parquet(*[_abs(root, r) for r in rels])
+    return _dv_frame(spark, table_path.rstrip("/"), rels)
+
+
+def _dv_frame(spark: SparkSession, root: str, rels: list[str]) -> DataFrame:
+    """The ``(__dv_f, __dv_i)`` rows of the listed sidecars, read with
+    their known schema (no footer-inference job)."""
+    return (spark.read.schema("f string, pos long")
+            .parquet(*[_abs(root, r) for r in rels])
             .select(F.col("f").alias("__dv_f"),
                     F.col("pos").alias("__dv_i")))
 
@@ -1708,47 +1731,57 @@ def _write_data_files(spark: SparkSession, table_path: str,
     return adds
 
 
-def _footer_stats(root: str, adds: list[dict],
-                  cols: list[str],
-                  spark: SparkSession | None = None) -> dict | None:
+def _footer_stats(root: str, adds: list[dict], cols: list[str],
+                  spark: SparkSession | None = None,
+                  strings: bool = True) -> dict | None:
     """Per-file (rows, {col: (min, max)}) read from LOCAL parquet
-    FOOTERS — the write-time stats the Spark scan job recomputes
-    (round-11 optimization, guide §1.2: don't compute things twice;
-    the row count and fixed-width min/max are already in every
-    footer, exactly). Applies ONLY when every stat column is a plain
-    integer/float leaf: fixed-width parquet statistics are exact by
-    format definition, whereas string min/max may be truncated and
-    timestamp/decimal/date values round-trip through different
-    Python types than the Spark collect lane — those batches keep
-    the Spark scan. A double chunk containing NaN has no footer
-    min/max (parquet-format rule), which lands in the bail-out path
-    below. Returns ``{add-path: (rows, {col: (mn, mx)})}`` or None
-    (non-local root, unsupported type, missing stats, any error) —
-    callers fall back to the Spark lane unchanged.
+    FOOTERS — the write-time stats the Spark scan job recomputes.
+    Applies only when every stat column is a top-level integer,
+    float or plain (UTF8_BINARY) string leaf. Fixed-width statistics
+    are exact by format definition; string statistics are exact
+    unsigned-byte-order values — Spark's binary string order — unless
+    the writer truncated them (``parquet.statistics.truncate.length``
+    set) or omitted them (min+max over 4 KB), and a collated column
+    orders differently from its bytes. ``strings=False`` refuses
+    strings outright (another writer's files may hold truncated
+    bounds this session's conf says nothing about). Those cases,
+    timestamp / decimal / date columns (they round-trip through
+    different Python types than the Spark collect lane) and a double
+    chunk containing NaN (no footer min/max, by parquet-format rule)
+    return None, as do a non-local root and any error: callers then
+    fall back to the Spark lane unchanged. Otherwise returns
+    ``{add-path: (rows, {col: (mn, mx)})}``.
 
-    Scale note: this is O(adds) small local footer reads on the
-    driver for the files THIS COMMIT wrote — bounded by the write's
-    own file count, never table size. Remote (s3a://…) tables keep
-    the executor-side scan. ``LUMA_LH_FOOTER_STATS=0`` disables the
-    lane (debug escape hatch)."""
-    if os.environ.get("LUMA_LH_FOOTER_STATS", "1") == "0":
-        return None
+    Scale note: O(adds) small local footer reads on the driver,
+    bounded by the write's own file count, never table size."""
     local_root = _local_fs_path(root, spark)
     if local_root is None:
         return None
+    spark = spark or SparkSession.getActiveSession()
+    trunc = "parquet.statistics.truncate.length"
     try:
+        if spark is None or spark.conf.get(trunc, None) is not None \
+                or spark._jsc.hadoopConfiguration().get(trunc) is not None:
+            return None
         import pyarrow as _pa
         import pyarrow.parquet as _pq
         out: dict = {}
         for a in adds:
             pf = _pq.ParquetFile(os.path.join(local_root, a["path"]))
             arrow = pf.schema_arrow
+            collated = set()
+            row_meta = (pf.metadata.metadata or {}).get(
+                b"org.apache.spark.sql.parquet.row.metadata")
+            if row_meta:
+                collated = {f["name"] for f in json.loads(row_meta)["fields"]
+                            if "__COLLATIONS" in (f.get("metadata") or {})}
             for c in cols:
                 i = arrow.get_field_index(c)
-                if i < 0:
+                if i < 0 or c in collated:
                     return None
                 t = arrow.field(i).type
-                if not (_pa.types.is_integer(t) or _pa.types.is_floating(t)):
+                if not (_pa.types.is_integer(t) or _pa.types.is_floating(t)
+                        or (strings and _pa.types.is_string(t))):
                     return None
             md = pf.metadata
             if md.num_rows == 0:
@@ -1786,14 +1819,14 @@ def _annotate_adds(spark: SparkSession, root: str, adds: list[dict],
                    stat_cols: list[str] | None = None,
                    bloom_cols: list[str] | None = None,
                    bloom_bits: int | None = None,
-                   bloom_hashes: int = 3) -> None:
+                   bloom_hashes: int = 3, foreign: bool = False) -> None:
     """Annotate add-actions in place with per-file stats (row count,
     min/max of every key + stat column, legacy first-key fields) and
     optional per-file Bloom filters — ONE column-pruned scan per
     concern over exactly the listed files. Shared by
     :func:`_write_data_files` (fresh writes) and
     :func:`convert_to_table` (in-place onboarding of pre-existing
-    files).
+    files, ``foreign=True``: their strings skip the footer lane).
 
     ``bloom_bits=None`` (the default) sizes the filter from the
     batch's LARGEST file: ~10 bits per row, power of two, floor 8192,
@@ -1805,7 +1838,7 @@ def _annotate_adds(spark: SparkSession, root: str, adds: list[dict],
     so mixed-size histories probe correctly."""
     cols = list(dict.fromkeys((keys or []) + (stat_cols or [])))
     cols = [c for c in cols if c in data_columns]
-    foot = (_footer_stats(root, adds, cols, spark)
+    foot = (_footer_stats(root, adds, cols, spark, strings=not foreign)
             if cols and adds else None)
     if foot is not None:
         for a in adds:
@@ -2054,7 +2087,8 @@ def convert_to_table(spark: SparkSession, table_path: str,
             spark.read.parquet(*[f"{root}/{a['path']}" for a in adds]),
             constraints, f"convert_to_table on {table_path}")
     _annotate_adds(spark, root, adds, data_columns, keys,
-                   stat_cols=partition_by, bloom_cols=bloom_cols)
+                   stat_cols=partition_by, bloom_cols=bloom_cols,
+                   foreign=True)
     _write_commit(spark, table_path, 1,
                   {"version": 1, "op": "convert", "keys": keys,
                    "schema": _schema_json(union_schema),
@@ -2492,6 +2526,16 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
     Duplicate source keys are the caller's contract to prevent
     (dedupe first); each duplicate would contribute a row.
 
+    The copy-on-write body is three passes: the source is
+    materialized once (``localCheckpoint``; the key bounds are
+    observed in the same job), one reconnaissance scan of the
+    stat-surviving files materializes the matched keys and observes
+    the touched files, and one write job rewrites the touched files
+    and appends the inserts. A sparse upsert runs about six Spark
+    jobs and evaluates the source once, so it may be a lazy plan
+    such as :func:`read_changes`; ``mode="mor"`` reads its source
+    twice, so checkpoint a lazy source before a merge-on-read.
+
     Returns merge stats: files touched/rewritten/carried and the
     committed version. Retries the whole merge against a fresh
     snapshot on a commit race (the merge is a deterministic function
@@ -2590,26 +2634,11 @@ def _recon_candidates(spark: SparkSession, table_path: str,
                                   version=base_version, eq=eq or None)
 
 
+@_pinned_attempt
 def _dml_once(spark: SparkSession, table_path: str, condition,
               update_set: dict[str, Column] | None, op: str,
               insert_df: DataFrame | None = None,
               recon_spec: tuple | None = None) -> dict:
-    """Pin-scoped wrapper of :func:`_dml_once_impl`: one attempt's
-    dozen-plus declaration derivations share a single commit-log
-    listing (see ``_PINNED_COMMITS``); a CAS loss retries outside the
-    scope and re-derives everything."""
-    _pin_snapshot(table_path)
-    try:
-        return _dml_once_impl(spark, table_path, condition, update_set,
-                              op, insert_df, recon_spec)
-    finally:
-        _unpin_snapshot(table_path)
-
-
-def _dml_once_impl(spark: SparkSession, table_path: str, condition,
-                   update_set: dict[str, Column] | None, op: str,
-                   insert_df: DataFrame | None = None,
-                   recon_spec: tuple | None = None) -> dict:
     """Shared copy-on-write body of DELETE WHERE / UPDATE WHERE /
     REPLACE WHERE: reconnaissance finds the files that contain a
     matching row (the rest carry by reference), touched files are
@@ -3275,31 +3304,13 @@ def _coerced(stat, probe):
         return None
 
 
-def _merge_once(spark: SparkSession, table_path: str, source: DataFrame,
-                keys: list[str],
+@_pinned_attempt
+def _merge_once(spark: SparkSession, table_path: str,
+                source: DataFrame, keys: list[str],
                 update_set: dict[str, Column] | str | None,
                 delete_condition: Column | str | None,
                 insert_when_not_matched: bool,
                 schema_evolution: bool = False) -> dict:
-    """Pin-scoped wrapper of :func:`_merge_once_impl` (see
-    ``_PINNED_COMMITS`` — one listing per attempt, CAS-loss retries
-    re-derive outside the scope)."""
-    _pin_snapshot(table_path)
-    try:
-        return _merge_once_impl(spark, table_path, source, keys,
-                                update_set, delete_condition,
-                                insert_when_not_matched,
-                                schema_evolution)
-    finally:
-        _unpin_snapshot(table_path)
-
-
-def _merge_once_impl(spark: SparkSession, table_path: str,
-                     source: DataFrame, keys: list[str],
-                     update_set: dict[str, Column] | str | None,
-                     delete_condition: Column | str | None,
-                     insert_when_not_matched: bool,
-                     schema_evolution: bool = False) -> dict:
     base_version = current_version(spark, table_path)
     if base_version == 0:
         raise FileNotFoundError(f"{table_path} has no commit log")
@@ -3324,20 +3335,24 @@ def _merge_once_impl(spark: SparkSession, table_path: str,
             spark, table_path, source.schema,
             f"merge_into schema evolution on {table_path}")
     tgt_cols = target.columns
-    src = source.select(*tgt_cols)
-    src_keys = src.select(*keys).distinct().localCheckpoint(eager=True)
 
-    # stat pruning BEFORE reconnaissance: a file whose recorded
-    # per-column key range is disjoint from the source's key envelope
-    # cannot contain a matched key — skip it without opening it.  At
-    # a clustered 10^6-file table this is the difference between a
-    # footer-read per file and O(matching files) I/O for the scan.
-    bnd = src_keys.agg(
-        *[F.min(k).alias(f"_n_{i}") for i, k in enumerate(keys)],
-        *[F.max(k).alias(f"_x_{i}") for i, k in enumerate(keys)]).collect()[0]
+    # source pass: the projected source is materialized exactly once
+    # (every later pass reads the checkpoint, so a nondeterministic
+    # source cannot disagree with itself) and the same job observes
+    # the key envelope that stat pruning tests files against
+    src_bounds = Observation()
+    src = (source.select(*tgt_cols)
+           .observe(src_bounds,
+                    *[F.min(k).alias(f"_n_{i}") for i, k in enumerate(keys)],
+                    *[F.max(k).alias(f"_x_{i}") for i, k in enumerate(keys)])
+           .localCheckpoint(eager=True))
+    bnd = src_bounds.get
     bounds = {k: (bnd[f"_n_{i}"], bnd[f"_x_{i}"])
               for i, k in enumerate(keys)
               if bnd[f"_n_{i}"] is not None}
+    # stat pruning BEFORE reconnaissance: a file whose recorded
+    # per-column key range is disjoint from the source's key envelope
+    # cannot contain a matched key — skip it without opening it.
     # pruned_candidate_files dispatches: driver-side JSON loop for
     # small tables, one Spark filter job over the parquet checkpoint's
     # add-action table for big ones (stats never cross to the driver)
@@ -3346,25 +3361,28 @@ def _merge_once_impl(spark: SparkSession, table_path: str,
                   if bounds else [])
     n_stat_pruned = len(files) - len(candidates)
 
-    # reconnaissance: which candidate files contain a matched key?
-    # The scan is pruned to (keys, _metadata) — exact file-level
-    # pruning over the stat-surviving files only. Keys cannot be
-    # renamed (guarded), so imposing the logical schema is safe even
-    # across RENAME vintages for this keys-only scan.
+    # reconnaissance pass: ONE keys-only scan of the candidates,
+    # deletion-vector filtered and semi-joined to the broadcast source
+    # keys. The matched (keys, file) rows are materialized for the
+    # insert anti-join; the same job observes the touched-file set.
+    # Keys cannot be renamed (guarded), so imposing the logical schema
+    # is safe even across RENAME vintages for this keys-only scan.
     touched: list[str] = []
     if candidates:
-        cand_paths = [_abs(root, p) for p in candidates]
-        touched_rows = (spark.read.option("mergeSchema", "true")
-                        .schema(target.schema).parquet(*cand_paths)
-                        .select(*keys,
-                                F.col("_metadata.file_path").alias("_f"))
-                        .join(F.broadcast(src_keys), keys, "left_semi")
-                        .select("_f").distinct().collect())
-        touched = sorted(r["_f"] for r in touched_rows)
+        touched_files = Observation()
+        hits = (_apply_dv(spark.read.schema(target.schema)
+                          .parquet(*[_abs(root, p) for p in candidates]), dv)
+                .select(*keys, F.col("_metadata.file_path").alias("_f"))
+                .join(F.broadcast(src.select(*keys)), keys, "left_semi")
+                .observe(touched_files, F.collect_set("_f").alias("files"))
+                .localCheckpoint(eager=True))
+        touched = sorted(touched_files.get["files"])
     touched_rel = [_log_ref(f, root) for f in touched]
-    carried = [f for f in files
-               if _log_ref(f, root) not in set(touched_rel)]
+    touched_set = set(touched_rel)
+    carried = [f for f in files if _log_ref(f, root) not in touched_set]
 
+    # rewrite pass: ONE write job over the touched files' rows (each
+    # left-joined to the broadcast source) plus the inserts
     parts: list[DataFrame] = []
     if touched:
         tgt_touched = _align_logical(
@@ -3402,24 +3420,12 @@ def _merge_once_impl(spark: SparkSession, table_path: str,
                 out_cols.append(F.col(f"tgt.{c}").alias(c))
         parts.append(joined.filter(~drop).select(*out_cols))
     if insert_when_not_matched:
-        # NOT-MATCHED detection needs only target keys that can match
-        # a source key — and every such key lives in a TOUCHED file by
-        # construction (touched = files whose key columns semi-join the
-        # source's keys; stat-pruned files are provably disjoint from
-        # the source envelope, and candidate files outside `touched`
-        # contain no source-matching key at all). Anti-joining against
-        # the touched files' DV-filtered keys is therefore exactly
-        # equivalent to the former full-table `target.select(keys)
-        # .distinct()` — but scans O(touched) files instead of the
-        # whole table (guide §3.2: reduce the side you shuffle; at a
-        # 10^6-file table a sparse merge previously paid a full
-        # key-column scan just to decide inserts).
-        if touched:
-            match_keys = tgt_touched.select(*keys).distinct()
-            inserts = src.join(match_keys, keys, "left_anti")
-        else:
-            inserts = src
-        parts.append(inserts)
+        # NOT MATCHED = no live target row carries the key. Every such
+        # row is a reconnaissance hit (stat-pruned files are disjoint
+        # from the source envelope), so the inserts anti-join the
+        # materialized hits instead of rescanning the touched files
+        parts.append(src.join(F.broadcast(hits.select(*keys)), keys,
+                              "left_anti") if touched else src)
 
     adds: list[dict] = []
     if parts:
@@ -4202,6 +4208,13 @@ def read_changes(spark: SparkSession, table_path: str,
     the join input is k files, not the table. Rows copied verbatim
     into a rewritten file (COW carry-over) hash-compare equal and are
     filtered out, so the feed contains exactly the logical changes.
+
+    The result is a lazy plan: building it launches no Spark job on a
+    table with a declared schema and no RENAME/DROP history. The one
+    full-outer join emits every change row through a single
+    ``explode``; each action over the frame re-runs it, so a consumer
+    that reads it more than once materializes it first (``merge_into``
+    does so in its source pass).
     """
     if keys is None:
         for doc in _commits(spark, table_path):
@@ -4233,29 +4246,18 @@ def read_changes(spark: SparkSession, table_path: str,
     events = _schema_events(spark, table_path, to_version)
     dv_from = _dv_overlay(spark, table_path, from_version)
     dv_to = _dv_overlay(spark, table_path, to_version)
-
-    def _overlayed(paths: list[str], dvx) -> DataFrame:
-        raw = spark.read.option("mergeSchema", "true").parquet(*paths)
-        if dvx is not None:
-            t = _dv_tag(raw)
-            raw = t.join(dvx, (t["__f"] == dvx["__dv_f"])
-                         & (t["__i"] == dvx["__dv_i"]),
-                         "left_anti").drop("__f", "__i")
-        return _apply_schema_events(raw, events)
-
-    def _aligned(paths: list[str], payload: list[str], dvx) -> DataFrame:
-        d = _overlayed(paths, dvx)
-        for c in payload:
-            if c not in d.columns:
-                d = d.withColumn(c, F.lit(None))
-        return d
-
+    # the declared schema at to_version types every side of the diff
+    # (files predating an added column read it as NULL) and spares the
+    # footer-union inference jobs of a mergeSchema read
+    reader = _file_reader(spark, table_schema(spark, table_path, to_version),
+                          events)
     payload = [c for c in base.columns if c not in keys]
     out_cols = keys + payload
 
-    def _typed(df: DataFrame, change: str) -> DataFrame:
-        return df.select(*out_cols).withColumn(
-            "_change_type", F.lit(change))
+    def _aligned(paths: list[str], dvx) -> DataFrame:
+        d = _apply_schema_events(_apply_dv(reader.parquet(*paths), dvx),
+                                 events)
+        return _pad_logical(d, base.schema).select(*out_cols)
 
     mor: DataFrame | None = None
     carried = sorted(old_names & new_names)
@@ -4263,20 +4265,13 @@ def read_changes(spark: SparkSession, table_path: str,
         # rows DV-deleted in range, in files BOTH snapshots share —
         # a file rewritten in range already reports its deletes via
         # the copy-on-write diff below
-        dvn = (spark.read.parquet(
-            *[_abs(root, r) for r in dv_new_rels])
-            .select(F.col("f").alias("__dv_f"),
-                    F.col("pos").alias("__dv_i")))
-        raw = _dv_tag(spark.read.option("mergeSchema", "true")
-                      .parquet(*carried))
+        dvn = _dv_frame(spark, root, dv_new_rels)
+        raw = _dv_tag(reader.parquet(*carried))
         hit = raw.join(dvn, (raw["__f"] == dvn["__dv_f"])
                        & (raw["__i"] == dvn["__dv_i"]),
                        "left_semi").drop("__f", "__i")
-        d = _apply_schema_events(hit, events)
-        for c in payload:
-            if c not in d.columns:
-                d = d.withColumn(c, F.lit(None))
-        mor = _typed(d, "delete")
+        mor = (_pad_logical(_apply_schema_events(hit, events), base.schema)
+               .select(*out_cols, F.lit("delete").alias("_change_type")))
 
     def _finish(df: DataFrame) -> DataFrame:
         return df.unionByName(mor) if mor is not None else df
@@ -4284,10 +4279,11 @@ def read_changes(spark: SparkSession, table_path: str,
     if not removed and not added:
         return _finish(empty)
     if not removed:
-        return _finish(_typed(_aligned(added, payload, dv_to), "insert"))
+        return _finish(_aligned(added, dv_to)
+                       .withColumn("_change_type", F.lit("insert")))
     if not added:
-        return _finish(_typed(_aligned(removed, payload, dv_from),
-                              "delete"))
+        return _finish(_aligned(removed, dv_from)
+                       .withColumn("_change_type", F.lit("delete")))
 
     def _sig(prefix: str) -> Column:
         # NUL-sentinel per column so (NULL, 'x') never collides with
@@ -4296,28 +4292,30 @@ def read_changes(spark: SparkSession, table_path: str,
                             F.lit(chr(0))) for c in payload]
         return F.md5(F.concat_ws(chr(1), *parts))
 
-    o = _aligned(removed, payload, dv_from).select(
+    o = _aligned(removed, dv_from).select(
         *keys, F.lit(1).alias("_o"),
         *[F.col(c).alias(f"_old_{c}") for c in payload])
-    n = _aligned(added, payload, dv_to).select(
+    n = _aligned(added, dv_to).select(
         *keys, F.lit(1).alias("_n"),
         *[F.col(c).alias(f"_new_{c}") for c in payload])
-    j = o.join(n, keys, "full_outer").localCheckpoint(eager=True)
-
-    ins = (j.filter(F.col("_o").isNull())
-           .select(*keys, *[F.col(f"_new_{c}").alias(c) for c in payload])
-           .withColumn("_change_type", F.lit("insert")))
-    del_ = (j.filter(F.col("_n").isNull())
-            .select(*keys, *[F.col(f"_old_{c}").alias(c) for c in payload])
-            .withColumn("_change_type", F.lit("delete")))
-    both = j.filter(F.col("_o").isNotNull() & F.col("_n").isNotNull())
-    diff = both.filter(_sig("_old_") != _sig("_new_"))
-    pre = (diff.select(*keys, *[F.col(f"_old_{c}").alias(c) for c in payload])
-           .withColumn("_change_type", F.lit("update_preimage")))
-    post = (diff.select(*keys, *[F.col(f"_new_{c}").alias(c) for c in payload])
-            .withColumn("_change_type", F.lit("update_postimage")))
-    return _finish(ins.unionByName(del_).unionByName(pre)
-                   .unionByName(post))
+    # one pass over the join: each key explodes into the change rows it
+    # stands for — insert, delete, a pre/post-image pair, or none (a
+    # COW carry-over whose payload hash is unchanged). Lazy: the
+    # consumer materializes the feed (merge_into's source pass does).
+    kinds = (F.when(F.col("_o").isNull(), F.array(F.lit("insert")))
+             .when(F.col("_n").isNull(), F.array(F.lit("delete")))
+             .when(_sig("_old_") != _sig("_new_"),
+                   F.array(F.lit("update_preimage"),
+                           F.lit("update_postimage")))
+             .otherwise(F.array().cast("array<string>")))
+    is_new = F.col("_change_type").isin("insert", "update_postimage")
+    return _finish(
+        o.join(n, keys, "full_outer")
+        .select("*", F.explode(kinds).alias("_change_type"))
+        .select(*keys,
+                *[F.when(is_new, F.col(f"_new_{c}"))
+                  .otherwise(F.col(f"_old_{c}")).alias(c) for c in payload],
+                "_change_type"))
 
 
 def analyze_table(spark: SparkSession, table_path: str,
@@ -4516,12 +4514,12 @@ def analyze_table(spark: SparkSession, table_path: str,
         if len(jobs) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
-            from pyspark import inheritable_thread_target
+            from ..core.session import inherit_thread_target
 
             # propagate the caller's job group/description/pool into
             # the workers so cancelJobGroup and scheduler pools still
             # reach the overlapped scans (ADVICE r11)
-            run_one = inheritable_thread_target(spark)(lambda j: j[1]())
+            run_one = inherit_thread_target(spark, lambda j: j[1]())
             with ThreadPoolExecutor(max_workers=min(len(jobs), 4)) as pool:
                 results = list(pool.map(run_one, jobs))
         else:

@@ -4,9 +4,11 @@ bit-identical to the Spark lanes they shortcut.
 - footer-based per-file stats (`lakehouse._footer_stats` inside
   `_annotate_adds`): parquet footers already hold exact row counts
   and exact min/max for fixed-width columns; the lane must produce
-  the same add-action annotations as the Spark scan, and must FALL
-  BACK (not guess) for string stat columns and NaN-suppressed
-  footer stats.
+  the same add-action annotations as the Spark scan (integer, float
+  and plain string columns), and must FALL BACK (not guess) for
+  NaN-suppressed, omitted (over 4 KB) or truncated footer stats,
+  collated strings and the string columns of files another writer
+  produced (`convert_to_table`).
 - ledger driver-side reads (`ChangeFeedLedger._versions_local` in
   `processed`/`_summary_full`): same (min, watermark, exceptions)
   triple as the Spark gap-finding join, including the non-contiguous
@@ -43,6 +45,23 @@ def tmpdir_():
     shutil.rmtree(d, ignore_errors=True)
 
 
+def _spark_lane_create(spark, path, df, keys):
+    """create_table with the footer lane forced off (as on a remote
+    root), so `_annotate_adds` runs its Spark stats job."""
+    orig = LH._footer_stats
+    LH._footer_stats = lambda *a, **k: None
+    try:
+        LH.create_table(spark, path, df, keys)
+    finally:
+        LH._footer_stats = orig
+
+
+def _footer_lane(spark, path, cols):
+    """The footer lane's verdict on a table's committed files."""
+    adds = [a for d in LH._commits(spark, path) for a in d.get("add", [])]
+    return LH._footer_stats(path, adds, cols, spark)
+
+
 def test_footer_stats_match_spark_lane(spark, tmpdir_):
     df = spark.range(0, 5000).select(
         F.col("id").alias("k"),
@@ -52,27 +71,86 @@ def test_footer_stats_match_spark_lane(spark, tmpdir_):
     p1, p2 = f"{tmpdir_}/a", f"{tmpdir_}/b"
     LH.create_table(spark, p1, df.repartition(4),
                     ["k", "d", "ni", "all_null"])
-    os.environ["LUMA_LH_FOOTER_STATS"] = "0"
-    try:
-        LH.create_table(spark, p2, df.repartition(4),
-                        ["k", "d", "ni", "all_null"])
-    finally:
-        del os.environ["LUMA_LH_FOOTER_STATS"]
+    _spark_lane_create(spark, p2, df.repartition(4),
+                       ["k", "d", "ni", "all_null"])
     assert _adds_norm(spark, p1) == _adds_norm(spark, p2)
+
+    # string keys: ASCII, non-ASCII (multi-byte UTF-8 where byte order
+    # and code-point order must agree), values over 64 characters
+    # (the page-index truncation length, not the footer's) and NULLs
+    vals = ["apple", "Zebra", "ärger", "日本語", "😀 emoji", "a" * 65,
+            "b" * 200 + "ü", None, "", "~tilde"]
+    sdf = spark.createDataFrame(
+        [(vals[i % len(vals)] and f"{vals[i % len(vals)]}{i // 10}", i)
+         for i in range(300)], "s string, n long")
+    p3, p4 = f"{tmpdir_}/s_footer", f"{tmpdir_}/s_spark"
+    LH.create_table(spark, p3, sdf.repartition(3), ["s", "n"])
+    _spark_lane_create(spark, p4, sdf.repartition(3), ["s", "n"])
+    assert _footer_lane(spark, p3, ["s", "n"]) is not None
+    assert _adds_norm(spark, p3) == _adds_norm(spark, p4)
+
+    # a column maximum over 4 KB: parquet omits the chunk's min/max,
+    # so the lane falls back to the Spark job — and still matches it
+    big = sdf.union(spark.createDataFrame([("😀" * 1500, 999)], sdf.schema))
+    p5, p6 = f"{tmpdir_}/big_footer", f"{tmpdir_}/big_spark"
+    LH.create_table(spark, p5, big.coalesce(1), ["s", "n"])
+    _spark_lane_create(spark, p6, big.coalesce(1), ["s", "n"])
+    assert _footer_lane(spark, p5, ["s", "n"]) is None
+    assert _adds_norm(spark, p5) == _adds_norm(spark, p6)
 
 
 def test_footer_stats_string_column_falls_back(spark, tmpdir_):
+    """A plain string column takes the footer lane; a truncating
+    writer or a collated column must fall back to the exact Spark
+    lane (truncated bounds, collation order != byte order)."""
     df = spark.range(0, 100).select(
         F.col("id").alias("k"),
         F.concat(F.lit("s"), F.col("id")).alias("s"))
-    # the lane itself must refuse string columns…
     p = f"{tmpdir_}/t"
     LH.create_table(spark, p, df.coalesce(1), ["k", "s"])
+    assert _footer_lane(spark, p, ["k", "s"]) is not None
     adds = [a for d in LH._commits(spark, p) for a in d.get("add", [])]
-    # …and the fallback Spark lane must still annotate exactly
-    assert adds and all("s" in a["stats"] for a in adds)
-    assert adds[0]["stats"]["s"]["min"] == "s0"
-    assert adds[0]["stats"]["s"]["max"] == "s99"
+    assert adds[0]["stats"]["s"] == {"min": "s0", "max": "s99"}
+
+    long_df = df.select("k", F.concat(F.lit("prefix-" * 4), "s").alias("s"))
+    spark.conf.set("parquet.statistics.truncate.length", "8")
+    try:
+        pt = f"{tmpdir_}/trunc"
+        LH.create_table(spark, pt, long_df.coalesce(1), ["k", "s"])
+        assert _footer_lane(spark, pt, ["k", "s"]) is None
+    finally:
+        spark.conf.unset("parquet.statistics.truncate.length")
+    adds = [a for d in LH._commits(spark, pt) for a in d.get("add", [])]
+    assert adds[0]["stats"]["s"] == {"min": "prefix-" * 4 + "s0",
+                                     "max": "prefix-" * 4 + "s99"}
+
+    # UTF8_LCASE orders 'a' < 'B'; the bytes order 'B' < 'a'
+    cdf = spark.createDataFrame([(1, "a"), (2, "B")], "k long, s string") \
+        .select("k", F.collate("s", "UTF8_LCASE").alias("s"))
+    pc = f"{tmpdir_}/coll"
+    LH.create_table(spark, pc, cdf.coalesce(1), ["k", "s"])
+    assert _footer_lane(spark, pc, ["k", "s"]) is None
+    adds = [a for d in LH._commits(spark, pc) for a in d.get("add", [])]
+    assert adds[0]["stats"]["s"] == {"min": "a", "max": "B"}
+
+
+def test_convert_string_key_ignores_foreign_footer_stats(spark, tmpdir_):
+    """convert_to_table onboards files another writer produced, whose
+    string statistics may be truncated without this session's conf
+    saying so: string keys take the exact Spark lane there."""
+    df = spark.range(0, 100).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("prefix-" * 4), F.col("id")).alias("s"))
+    p = f"{tmpdir_}/foreign"
+    spark.conf.set("parquet.statistics.truncate.length", "8")
+    try:
+        df.coalesce(1).write.parquet(p)
+    finally:
+        spark.conf.unset("parquet.statistics.truncate.length")
+    LH.convert_to_table(spark, p, ["s"])
+    adds = [a for d in LH._commits(spark, p) for a in d.get("add", [])]
+    assert adds[0]["stats"]["s"] == {"min": "prefix-" * 4 + "0",
+                                     "max": "prefix-" * 4 + "99"}
 
 
 def test_footer_stats_nan_bails_to_spark_lane(tmpdir_, spark):
