@@ -44,12 +44,6 @@ def canonicalize_columns(df: DataFrame) -> DataFrame:
     return df.toDF(*dedupe_names(df.columns))
 
 
-def drop_dupe_columns(df: DataFrame) -> DataFrame:
-    """Drop ``*_dupe`` columns before warehouse load (reference:
-    lambda_function.py:173-175)."""
-    return df.drop(*[c for c in df.columns if c.endswith("_dupe")])
-
-
 # ---------------------------------------------------------------------------
 # Value-level cleansing (Column expressions)
 # ---------------------------------------------------------------------------

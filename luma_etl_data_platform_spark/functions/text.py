@@ -131,32 +131,6 @@ def quality_score(col: Column) -> Column:
                   / F.lit(1_000_000.0)).otherwise(F.lit(0.0))
 
 
-def stopword_ratio_6dp(col: Column) -> Column:
-    """:func:`stopword_ratio` emitted to 6 dp through the
-    exact-integer micro trick (``round(sw*1e6/wc)/1e6``) — for
-    oracle-compared outputs; comparisons should use the raw ratio."""
-    t = tokens(col)
-    wc = F.size(t)
-    sw = F.size(F.filter(t, lambda x: x.isin(*STOPWORDS)))
-    return F.when(wc > 0,
-                  F.round(sw.cast("double") * 1_000_000.0
-                          / wc.cast("double"))
-                  / F.lit(1_000_000.0)).otherwise(F.lit(0.0))
-
-
-def avg_token_len_6dp(col: Column) -> Column:
-    """:func:`avg_token_len` emitted to 6 dp through the
-    exact-integer micro trick — for oracle-compared outputs."""
-    t = tokens(col)
-    wc = F.size(t)
-    total = F.aggregate(F.transform(t, F.length), F.lit(0),
-                        lambda acc, x: acc + x)
-    return F.when(wc > 0,
-                  F.round(total.cast("double") * 1_000_000.0
-                          / wc.cast("double"))
-                  / F.lit(1_000_000.0)).otherwise(F.lit(0.0))
-
-
 def lang_marker_counts(col: Column) -> dict[str, Column]:
     t = tokens(col)
     return {

@@ -12,7 +12,7 @@ post-filter, the same inverted-index shape as the shingle dedup.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.partitioning import spread as _spread
@@ -41,28 +41,3 @@ def fuzzy_pairs(df: DataFrame, text_col: str, id_col: str,
         .filter(F.col("distance") <= max_distance)
     )
 
-
-def linkage_scores(a: DataFrame, b: DataFrame, on,
-                   fields: list[tuple[Column, int, int]]) -> DataFrame:
-    """Fellegi-Sunter record-linkage scoring over blocked pairs:
-    join ``a`` × ``b`` on the blocking key(s), then score each pair
-    as the sum of per-field agreement weights — ``w_agree`` when the
-    field predicate holds, ``w_disagree`` otherwise, with weights
-    the PRE-COMPUTED integer milli-bits round(log2(m/u)·1000) /
-    round(log2((1-m)/(1-u))·1000) for the field's match/unmatch
-    probabilities. Passing weights as integer literals (not
-    computing logs in the plan) keeps the score exact BIGINT —
-    partition-stable and engine-portable.
-
-    Scale design: the blocking key bounds the candidate set (never
-    score the cross product); the score itself is a narrow map over
-    the blocked join. For skewed blocks, pre-split with
-    `operators/skew.py` salting; for recall beyond one key, union
-    several blocked passes and dedupe on (a_id, b_id).
-    """
-    pairs = a.join(b, on)
-    score: Column = F.lit(0).cast("long")
-    for pred, w_agree, w_disagree in fields:
-        score = score + F.when(pred, F.lit(w_agree)) \
-                         .otherwise(F.lit(w_disagree))
-    return pairs.withColumn("fs_score", score)

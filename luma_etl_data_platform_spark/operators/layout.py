@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import fileio
+
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
                       mode: str = "overwrite") -> None:
@@ -27,10 +29,6 @@ def write_range_layout(df: DataFrame, path: str, order_col: str,
     (df.repartitionByRange(n_files, F.col(order_col))
        .sortWithinPartitions(order_col)
        .write.mode(mode).parquet(path))
-
-
-def read_pruned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def morton_key_n(cols: list, bits: int = 16):
@@ -86,17 +84,11 @@ def write_zorder_layout(df: DataFrame, path: str, col1: str, col2: str,
 def data_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(n_data_files, total_bytes) under ``path`` (recursive), counting
     only data files (skips _SUCCESS/_metadata and hidden files)."""
-    from ..plans.transform import _hadoop_fs
-    fs, root, jvm = _hadoop_fs(spark, path)
     n = total = 0
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        n += 1
-        total += st.getLen()
+    for e in fileio.file_io(spark, path).walk_files(path):
+        if not e.name.rsplit("/", 1)[-1].startswith(("_", ".")):
+            n += 1
+            total += e.size
     return n, total
 
 
@@ -125,10 +117,10 @@ def compact_small_files(spark: SparkSession, path: str,
     fragmentation direction — that Spark pipelines additionally need
     because micro-batches append many small files.
     """
-    from ..plans.transform import _hadoop_fs, _partition_dirs, _swap_dir
-    fs, _, jvm = _hadoop_fs(spark, path)
+    from ..plans.transform import _partition_dirs, _swap_dir
+    io = fileio.file_io(spark, path)
     parts = ([""] if partition_depth == 0 else
-             _partition_dirs(fs, jvm, path, partition_depth))
+             _partition_dirs(io, path, partition_depth))
     report = {"partitions_seen": len(parts), "partitions_compacted": 0,
               "files_before": 0, "files_after": 0}
     for rel in parts:
@@ -141,7 +133,7 @@ def compact_small_files(spark: SparkSession, path: str,
             continue
         staged = sub.rstrip("/") + "__compact_" + __import__("uuid").uuid4().hex[:8]
         spark.read.parquet(sub).coalesce(int(want)).write.parquet(staged)
-        _swap_dir(fs, jvm, sub, staged)
+        _swap_dir(io, sub, staged)
         report["partitions_compacted"] += 1
         report["files_after"] += data_file_stats(spark, sub)[0]
     return report

@@ -73,20 +73,6 @@ def _all_terms(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
             .agg(F.sum(F.col("t").cast("decimal(38,0)")).alias("g")))
 
 
-def gram_terms(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
-    """(i, j, g) exact Gram entries ``Σ q_i q_j`` over the corpus,
-    1-indexed dims (vectors truncated to ``dim``)."""
-    return (_all_terms(df, vec_col, dim)
-            .filter((F.col("i") >= 1) & (F.col("j") >= 1)))
-
-
-def dim_sums(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
-    """(i, s) exact per-dimension sums, 1-indexed."""
-    return (_all_terms(df, vec_col, dim)
-            .filter((F.col("i") >= 1) & (F.col("j") == 0))
-            .select("i", F.col("g").alias("s")))
-
-
 def _power_iterate(A: list[list[int]], dim: int,
                    k_iters: int) -> list[int]:
     v = [_M] * dim

@@ -256,7 +256,10 @@ def pq_topk(df: DataFrame, query: DataFrame, k: int = 10,
           .select("m", "code", "sub",
                   _d2(F.col("sub"), F.col("qsub")).alias("qd2"))
           .agg(F.sort_array(F.collect_list(
-              F.struct("m", "code", "sub", "qd2"))).alias("_bq")))
+              F.struct("m", "code", "sub", "qd2"))).alias("_bq"))
+          # an empty query (or codebook) aggregates to one EMPTY row;
+          # drop it so the cross join below yields no rows at all
+          .filter(F.size("_bq") > 0))
     # narrow encode (guide §2.4): per-subspace argmin, code string and
     # ADC sum are all functions of the single corpus row plus the
     # broadcast codebook — zero exchanges before the final top-k.

@@ -303,29 +303,6 @@ def cms_estimate(lanes: DataFrame, keys: DataFrame, key_col: str,
             .withColumnRenamed("_k", key_col))
 
 
-def cms_join_size(lanes_a: DataFrame, lanes_b: DataFrame) -> DataFrame:
-    """Equi-join cardinality estimate from two count-min sketches
-    built with the SAME (depth, width): the true join size is the
-    frequency-vector inner product Σ_k fA(k)·fB(k), and each sketch
-    row's bucket-wise inner product Σ_b cntA·cntB over-estimates it
-    (collisions only add mass), so ``min`` over the depth rows is a
-    one-sided estimate — the classic AMS/CMS join-size bound used by
-    query optimizers before committing to a join strategy.
-
-    Cost: the sketches are ≤ depth×width rows each; the estimate is
-    a tiny join + two aggregations — no touch of either input table.
-    Overflow bound: Σ cntA·cntB ≤ N_A·N_B / width (per row, in
-    expectation) and is exact BIGINT; keep N_A·N_B below 2^63·width
-    (N ≈ 3e9 per side at width 1024) or widen to DECIMAL.
-    """
-    a = lanes_a.select("_row", "_bucket", F.col("_cnt").alias("_ca"))
-    b = lanes_b.select("_row", "_bucket", F.col("_cnt").alias("_cb"))
-    per_row = (a.join(b, ["_row", "_bucket"])
-               .groupBy("_row")
-               .agg(F.sum(F.col("_ca") * F.col("_cb")).alias("_est")))
-    return per_row.agg(F.min("_est").alias("join_size_est"))
-
-
 # ---------------------------------------------------------------------------
 # Portable HyperLogLog (Flajolet et al. 2007) — md5 registers
 # ---------------------------------------------------------------------------

@@ -40,12 +40,6 @@ def exact_sum(c: Column, scale: int = 2) -> Column:
     return F.round(F.sum(c).cast("decimal(38,6)"), scale).cast("double")
 
 
-def exact_avg(c: Column, scale: int = 4) -> Column:
-    """avg = exact decimal sum (→ identical double) / exact count —
-    deterministic division of deterministic operands."""
-    return F.round(F.sum(c).cast("double") / F.count(F.lit(1)), scale)
-
-
 def revenue_expr() -> Column:
     """l_extendedprice * (1 - l_discount), decimal-exact."""
     one = F.lit(1).cast(RATE)

@@ -1483,8 +1483,7 @@ def lakehouse_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     LH.delete_where(spark, src, "o_orderkey % 5 = 0")
     clone_after = _agg(dst, "clone_after_update")
     src_after = _agg(src, "source_after_delete")
-    clone_data = [rel for rel, _p, _sz in LH._data_files_on_disk(
-        *LH._fs(spark, dst), dst)]
+    clone_data = [e.name for e in LH._data_files_on_disk(spark, dst)]
     # the clone's own UPDATE wrote files under its root; zero-copy
     # means the FORK itself wrote none — every inherited source file
     # is byte-untouched and all pre-update clone reads used them

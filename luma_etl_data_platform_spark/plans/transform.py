@@ -35,6 +35,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import fileio
+
 
 # ---------------------------------------------------------------------------
 # template rendering + script running (S17/S18)
@@ -216,29 +218,21 @@ def upsert(spark: SparkSession, target: str, source: DataFrame,
     merge_upsert_parquet(spark, target, source, keys)
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
-
-
-def _swap_dir(fs, jvm, live: str, staged: str) -> None:
+def _swap_dir(io, live: str, staged: str) -> None:
     """Replace directory ``live`` with ``staged`` via two renames
     (move live aside → move staged in → delete old). A failure after
     the first rename rolls back; the live data is never deleted
     before its replacement is fully written."""
-    Path = jvm.org.apache.hadoop.fs.Path
-    live_p, staged_p = Path(live), Path(staged)
-    old_p = Path(live.rstrip("/") + "__old_" + uuid.uuid4().hex[:8])
-    had_live = fs.exists(live_p)
-    if had_live and not fs.rename(live_p, old_p):
-        raise IOError(f"rename {live} -> {old_p} failed")
-    if not fs.rename(staged_p, live_p):
+    old = live.rstrip("/") + "__old_" + uuid.uuid4().hex[:8]
+    had_live = io.exists(live)
+    if had_live and not io.rename(live, old):
+        raise IOError(f"rename {live} -> {old} failed")
+    if not io.rename(staged, live):
         if had_live:
-            fs.rename(old_p, live_p)  # roll back
+            io.rename(old, live)  # roll back
         raise IOError(f"rename {staged} -> {live} failed")
     if had_live:
-        fs.delete(old_p, True)
+        io.delete(old)
 
 
 def replace_parquet_staged(spark: SparkSession, target_path: str,
@@ -249,9 +243,8 @@ def replace_parquet_staged(spark: SparkSession, target_path: str,
     written — and no persist()/lineage games are needed because the
     write job reads the UNTOUCHED live directory."""
     staged = target_path.rstrip("/") + "__stage_" + uuid.uuid4().hex[:8]
-    fs, _, jvm = _hadoop_fs(spark, target_path)
     df.write.mode("overwrite").parquet(staged)
-    _swap_dir(fs, jvm, target_path, staged)
+    _swap_dir(fileio.file_io(spark, target_path), target_path, staged)
 
 
 def merge_upsert_parquet(spark: SparkSession, target_path: str,
@@ -303,24 +296,23 @@ def merge_upsert_parquet(spark: SparkSession, target_path: str,
     merged = keep.unionByName(source.select(*target.columns))
 
     staged = target_path.rstrip("/") + "__stage_" + uuid.uuid4().hex[:8]
-    fs, _, jvm = _hadoop_fs(spark, target_path)
+    io = fileio.file_io(spark, target_path)
     merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(staged)
     # swap each staged partition dir into the live tree
-    for rel in _partition_dirs(fs, jvm, staged, len(partition_cols)):
-        _swap_dir(fs, jvm, f"{target_path.rstrip('/')}/{rel}", f"{staged}/{rel}")
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staged), True)
+    for rel in _partition_dirs(io, staged, len(partition_cols)):
+        _swap_dir(io, f"{target_path.rstrip('/')}/{rel}", f"{staged}/{rel}")
+    io.delete(staged)
 
 
-def _partition_dirs(fs, jvm, root: str, depth: int) -> list[str]:
+def _partition_dirs(io, root: str, depth: int) -> list[str]:
     """Relative ``col=value[/col=value...]`` paths of the partition
     directories exactly ``depth`` levels under ``root``."""
-    Path = jvm.org.apache.hadoop.fs.Path
     rels: list[str] = []
 
     def walk(prefix: str, level: int) -> None:
-        for st in fs.listStatus(Path(f"{root}/{prefix}" if prefix else root)):
-            name = st.getPath().getName()
-            if not st.isDirectory() or "=" not in name:
+        for e in io.list(f"{root}/{prefix}" if prefix else root):
+            name = e.name
+            if e.size is not None or "=" not in name:
                 continue
             rel = f"{prefix}/{name}" if prefix else name
             if level + 1 == depth:

@@ -10,8 +10,6 @@ are parquet-backed catalog tables.
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
-
 from ..functions.cleansing import dedupe_names, escape_identifier
 from ..schema_registry.types import spark_type_for, sqlserver_type_for
 
@@ -53,11 +51,3 @@ def spark_create_table(table: str, metadata: dict,
     loc = f"\nLOCATION '{location}'" if location else ""
     return f"CREATE TABLE IF NOT EXISTS {table} (\n  {body}\n) USING parquet{loc}"
 
-
-def struct_for_staging(metadata: dict, columns: list[str] | None = None) -> T.StructType:
-    names = list(metadata) if columns is None else [c for c in columns if c in metadata]
-    fixed = dedupe_names(names)
-    return T.StructType([
-        T.StructField(fx, spark_type_for(metadata[orig]), True)
-        for orig, fx in zip(names, fixed)
-    ])

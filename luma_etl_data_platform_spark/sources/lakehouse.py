@@ -75,6 +75,8 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from . import fileio
+
 _LOG_DIR = "_log"
 _VERSION_WIDTH = 20
 
@@ -86,32 +88,6 @@ class CommitConflictError(RuntimeError):
 class ConstraintViolationError(ValueError):
     """A write contained rows violating a declared CHECK constraint;
     nothing was committed."""
-
-
-# FileSystem handle memo (round-11 optimization): Hadoop already
-# caches FileSystem instances JVM-side by (scheme, authority, ugi),
-# so the two py4j round trips per _fs call (Path construction +
-# getFileSystem) return the same object every time. Metadata-bound
-# gates make ~100 _fs calls per query; memoizing on the URI's
-# scheme://authority removes ~0.3 s of pure py4j latency per gate.
-# The repo never calls fs.close(), so a cached handle cannot go
-# stale; a new SparkContext gets a fresh entry (keyed by JVM id).
-_FS_CACHE: dict[tuple[int, str], object] = {}
-_FS_AUTH_RE = _re.compile(r"^([a-z0-9+.-]+)://([^/]*)", _re.IGNORECASE)
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    m = _FS_AUTH_RE.match(path)
-    key = (id(jvm), f"{m.group(1)}://{m.group(2)}" if m else "file")
-    fs = _FS_CACHE.get(key)
-    if fs is None:
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if len(_FS_CACHE) > 64:
-            _FS_CACHE.clear()
-        _FS_CACHE[key] = fs
-    return fs, jvm
 
 
 def _log_path(table_path: str, version: int) -> str:
@@ -129,34 +105,13 @@ def _ckpt_path(table_path: str, version: int) -> str:
             f"{version:0{_VERSION_WIDTH}d}.checkpoint.json")
 
 
-def _read_text(fs, jvm, path: str) -> str:
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    stream = fs.open(p)
-    sink = jvm.java.io.ByteArrayOutputStream()
-    jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, sink, 65536, True)
-    return bytes(sink.toByteArray()).decode("utf-8")
-
-
-def _rel_path(p: str, root: str) -> str:
-    """``p`` (absolute, possibly scheme-qualified) relative to the
-    table root — partition-dir components preserved (``d=3/part-x``),
-    unlike a bare basename. Falls back to the basename when ``p``
-    does not sit under ``root`` (e.g. scheme-mangled paths)."""
-    p2 = p.split("://", 1)[-1]
-    r2 = root.rstrip("/").split("://", 1)[-1]
-    i = p2.find(r2 + "/")
-    if i >= 0:
-        return p2[i + len(r2):].lstrip("/")
-    return p2.rsplit("/", 1)[-1]
-
-
 def _log_ref(p: str, root: str) -> str:
     """The commit-log reference string for a scanned/snapshot file
     path: root-relative when the file sits under the table root,
     ABSOLUTE otherwise (a shallow clone's inherited source files are
     logged by absolute path — see :func:`clone_table`). Remove lists
-    must be built with this, not :func:`_rel_path`, or a cross-root
-    reference would basename-mangle and never match its add-action."""
+    must be built with this, not a root-relative path, or a
+    cross-root reference would never match its add-action."""
     p2 = p.split("://", 1)[-1]
     if p2.startswith("file:"):
         p2 = p2[len("file:"):]
@@ -181,7 +136,6 @@ def _canon_root(path: str) -> str:
     elif p.startswith("file:"):
         p = p[len("file:"):]
     if "://" not in p and not p.startswith("/"):
-        import os
         p = os.path.abspath(p)
     return p
 
@@ -197,26 +151,15 @@ def _abs(root: str, rel: str) -> str:
 
 def _write_commit(spark: SparkSession, table_path: str, version: int,
                   doc: dict) -> None:
-    """Atomically publish ``doc`` as ``_log/<version>.json`` — write
-    to a temp name, then rename; Hadoop rename fails if the
-    destination exists, so exactly one writer wins each version.
-    Every commit is stamped with a wall-clock ``ts`` (epoch seconds)
-    for TIMESTAMP AS OF time travel — see
-    :func:`version_at_timestamp`."""
+    """Atomically publish ``doc`` as ``_log/<version>.json`` (the
+    seam's ``publish`` is create-if-absent, so exactly one writer
+    wins each version). Every commit is stamped
+    with a wall-clock ``ts`` (epoch seconds) for TIMESTAMP AS OF time
+    travel — see :func:`version_at_timestamp`."""
     doc.setdefault("ts", time.time())
-    fs, jvm = _fs(spark, table_path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    log_dir = f"{table_path.rstrip('/')}/{_LOG_DIR}"
-    fs.mkdirs(Path(log_dir))
-    tmp = Path(f"{log_dir}/.tmp-{uuid.uuid4().hex}")
-    stream = fs.create(tmp, False)
-    try:
-        stream.write(bytearray(json.dumps(doc, sort_keys=True).encode("utf-8")))
-    finally:
-        stream.close()
-    dest = Path(_log_path(table_path, version))
-    if not fs.rename(tmp, dest):
-        fs.delete(tmp, False)
+    if not fileio.file_io(spark, table_path).publish(
+            _log_path(table_path, version),
+            json.dumps(doc, sort_keys=True).encode("utf-8")):
         raise CommitConflictError(
             f"version {version} of {table_path} was committed concurrently")
     # a pinned scope that reads after its own commit must re-list
@@ -238,11 +181,11 @@ def txn_state(spark: SparkSession, status_dir: str, txn_id: str) -> str:
     state = _TXN_FINAL.get(key)
     if state is not None:
         return state
-    fs, jvm = _fs(spark, status_dir)
-    path = f"{status_dir.rstrip('/')}/{txn_id}.json"
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
+    text = fileio.file_io(spark, status_dir).read_text(
+        f"{status_dir.rstrip('/')}/{txn_id}.json")
+    if text is None:
         return "pending"
-    state = json.loads(_read_text(fs, jvm, path))["status"]
+    state = json.loads(text)["status"]
     _TXN_FINAL[key] = state
     return state
 
@@ -259,17 +202,15 @@ def _last_ckpt_pointer_path(table_path: str) -> str:
     return f"{table_path.rstrip('/')}/{_LOG_DIR}/_last_checkpoint"
 
 
-def _last_ckpt_anchor(fs, jvm, table_path: str) -> int:
+def _last_ckpt_anchor(io, table_path: str) -> int:
     """The ``_last_checkpoint`` pointer's version, 0 when absent or
     unreadable (full-parse fallback) — Delta's read-one-file
     discovery of the replay anchor: at a long-retention log, parsing
     starts at the anchor instead of json.loads-ing every retained
     doc."""
-    p = jvm.org.apache.hadoop.fs.Path(_last_ckpt_pointer_path(table_path))
     try:
-        if not fs.exists(p):
-            return 0
-        return int(json.loads(_read_text(fs, jvm, str(p)))["version"])
+        text = io.read_text(_last_ckpt_pointer_path(table_path))
+        return 0 if text is None else int(json.loads(text)["version"])
     except Exception:
         return 0  # torn/corrupt pointer: never an error, just slower
 
@@ -298,22 +239,17 @@ def _name_version(name: str) -> int | None:
 # them per replay measurably slows the metadata-heavy paths (~1 s on
 # the parquet-checkpoint gate), so the invariant is that NO consumer
 # mutates an add-action in place — a mutating operation must copy
-# first (`_copy_json`), as `analyze_table` does. `create_table`
+# first (`_copy_json`), as `analyze_table` does. The invariant is
+# enforced mechanically: every doc is stored frozen on its cache miss
+# (`_freeze_json` — dict/list subclasses whose mutators raise
+# FrozenDocError at the mutation site, while json.dumps, isinstance
+# checks and `_copy_json` work unchanged). `create_table`
 # additionally drops keys under the table's log dir
 # (`_invalidate_doc_cache`): a table deleted and recreated at the
 # same path (rmtree in tests/dev) must never serve the old table's
 # docs through an mtime/len collision.
 _DOC_CACHE: dict[tuple, dict] = {}
 _DOC_CACHE_MAX = 8192
-
-# Debug-mode enforcement of the no-in-place-mutation invariant above:
-# with LUMA_LH_FREEZE_DOCS set (the test suite's conftest sets it),
-# cached docs are stored as frozen dict/list subclasses — any
-# consumer that mutates a shared element trips FrozenDocError at the
-# mutation site instead of silently poisoning every later replay of
-# that commit. dict/list SUBCLASSES keep json.dumps, isinstance
-# checks, and _copy_json (which returns plain mutable copies)
-# working unchanged; production runs (flag unset) pay zero cost.
 
 
 class FrozenDocError(TypeError):
@@ -473,117 +409,29 @@ def _fresh_top(doc: dict) -> dict:
             for k, v in doc.items()}
 
 
-_DEFAULT_FS_LOCAL: dict[int, bool] = {}
-
-
-def _default_fs_is_local(spark: SparkSession | None = None) -> bool:
-    """True when Hadoop's ``fs.defaultFS`` resolves SCHEME-LESS paths
-    to the driver-local filesystem (the local/standalone default).
-    Under an ``hdfs://``-style default a scheme-less table root lives
-    on the cluster filesystem, so the driver-side fast lanes must not
-    claim it (ADVICE r11, medium: the old guard silently walked a
-    nonexistent local dir and could commit an empty add list). Cached
-    per JVM; with no resolvable session the answer is the
-    conservative False (Hadoop lane)."""
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            return False
-    key = id(spark._jvm)
-    v = _DEFAULT_FS_LOCAL.get(key)
-    if v is None:
-        try:
-            v = str(spark._jsc.hadoopConfiguration()
-                    .get("fs.defaultFS", "file:///")).startswith("file:")
-        except Exception:
-            v = False
-        _DEFAULT_FS_LOCAL[key] = v
-    return v
-
-
-def _local_fs_path(path: str,
-                   spark: SparkSession | None = None) -> str | None:
-    """Local-filesystem form of ``path`` (``file:`` scheme stripped),
-    None for non-local URIs — the shared guard of every driver-side
-    fast lane (footer stats, ledger reads, the local log listing).
-    An explicit ``file:`` scheme is local by definition; a scheme-less
-    path is local only when the session's default filesystem is
-    (:func:`_default_fs_is_local`)."""
-    if path.startswith("file:"):
-        return path[len("file:"):]
-    if "://" in path:
-        return None
-    return path if _default_fs_is_local(spark) else None
-
-
 def _commits(spark: SparkSession, table_path: str) -> list[dict]:
     root = table_path.rstrip("/")
     pin = _PINNED_COMMITS.get(root)
     if pin is not None and pin[1] is not None:
         docs = [_fresh_top(d) for d in pin[1]]
         return _annotate_txn(spark, docs)
-    local = _local_fs_path(root, spark)
-    if local is not None:
-        # LOCAL log dirs list and read driver-side (round-11, same
-        # class as _footer_stats / the ledger lanes): the Hadoop
-        # listing costs 3+ py4j round trips PER LOG ENTRY per fresh
-        # listing, which is the residual fixed cost of every public
-        # read's first `_commits` in its scope. os.scandir yields the
-        # identical (path, mtime_ms, size) cache keys (commit files
-        # are immutable once renamed in, so the triple still
-        # identifies content; key path keeps the Hadoop "file:" form
-        # so both lanes share cached docs). Non-local URIs keep the
-        # Hadoop lane unchanged.
-        log_dir_l = os.path.abspath(os.path.join(local, _LOG_DIR))
-        if not os.path.isdir(log_dir_l):
-            return []
-        listing = []
-        with os.scandir(log_dir_l) as it:
-            for e in it:
-                try:
-                    if not e.is_file():
-                        continue
-                    st = e.stat()
-                except OSError:
-                    continue  # vanished between list and stat
-                listing.append((e.name, e.path,
-                                (f"file:{e.path}",
-                                 st.st_mtime_ns // 1_000_000,
-                                 st.st_size)))
+    io = fileio.file_io(spark, root)
+    # (path, mtime_ms, size) is the doc-cache key: commit files are
+    # immutable once published, so the triple identifies content
+    listing = [e for e in io.list(f"{root}/{_LOG_DIR}") if e.size is not None]
+    if not listing:
+        return []
+    anchor = _last_ckpt_anchor(io, root)
 
-        def _read_doc(p: str) -> str:
-            with open(p, "r", encoding="utf-8") as fh:
-                return fh.read()
-
-        anchor = 0
-        ptr = os.path.join(log_dir_l, "_last_checkpoint")
-        try:
-            if os.path.exists(ptr):
-                anchor = int(json.loads(_read_doc(ptr))["version"])
-        except Exception:
-            anchor = 0  # torn/corrupt pointer: full parse, never error
-    else:
-        fs, jvm = _fs(spark, table_path)
-        Path = jvm.org.apache.hadoop.fs.Path
-        log_dir = Path(f"{root}/{_LOG_DIR}")
-        if not fs.exists(log_dir):
-            return []
-        listing = [(st.getPath().getName(), str(st.getPath()),
-                    (str(st.getPath()), st.getModificationTime(),
-                     st.getLen()))
-                   for st in fs.listStatus(log_dir)]
-
-        def _read_doc(p: str) -> str:
-            return _read_text(fs, jvm, p)
-
-        anchor = _last_ckpt_anchor(fs, jvm, table_path)
-
-    def _load(p: str, key) -> dict:
+    def _load(e) -> dict:
+        key = (e.path, e.mtime_ms, e.size)
         doc = _DOC_CACHE.get(key)
         if doc is None:
-            doc = json.loads(_read_doc(p))
-            if os.environ.get("LUMA_LH_FREEZE_DOCS"):
-                doc = _freeze_json(doc)
+            text = io.read_text(e.path)
+            if text is None:
+                raise FileNotFoundError(f"commit {e.path} vanished "
+                                        "after the log listing")
+            doc = _freeze_json(json.loads(text))
             if len(_DOC_CACHE) >= _DOC_CACHE_MAX:
                 for k in list(_DOC_CACHE)[:_DOC_CACHE_MAX // 2]:
                     _DOC_CACHE.pop(k, None)
@@ -602,15 +450,15 @@ def _commits(spark: SparkSession, table_path: str) -> list[dict]:
         # pick the checkpoint). With a pointer anchor, names BELOW it
         # are never even opened — O(tail) parses per call.
         by_version: dict[int, tuple[bool, dict]] = {}
-        for name, p, key in listing:
-            if not name.endswith(".json") or name.startswith("."):
+        for e in listing:
+            if not e.name.endswith(".json") or e.name.startswith("."):
                 continue
             if anchor:
-                nv = _name_version(name)
+                nv = _name_version(e.name)
                 if nv is not None and nv < anchor:
                     continue
-            doc = _load(p, key)
-            is_ckpt = name.endswith(".checkpoint.json")
+            doc = _load(e)
+            is_ckpt = e.name.endswith(".checkpoint.json")
             prev = by_version.get(doc["version"])
             if prev is None or (is_ckpt and not prev[0]):
                 by_version[doc["version"]] = (is_ckpt, doc)
@@ -676,19 +524,14 @@ def _install_adds_parquet(spark: SparkSession, table_path: str,
     :func:`expire_snapshots`, :func:`clone_table` and
     :func:`restore_table` — the three full-state restatement sites of
     the distributed metadata plane."""
-    fs, jvm = _fs(spark, table_path)
-    Path = jvm.org.apache.hadoop.fs.Path
+    io = fileio.file_io(spark, table_path)
     root = table_path.rstrip("/")
-    log_dir = f"{root}/{_LOG_DIR}"
-    fs.mkdirs(Path(log_dir))
     data_rel = _ckpt_data_rel(version)
-    data_dest = Path(f"{root}/{data_rel}")
-    tmp_data = f"{log_dir}/.ckptdata-{uuid.uuid4().hex}"
+    tmp_data = f"{root}/{_LOG_DIR}/.ckptdata-{uuid.uuid4().hex}"
     adds_df.write.mode("overwrite").parquet(tmp_data)
-    if fs.exists(data_dest):
-        fs.delete(data_dest, True)  # stale dir of a crashed run
-    if not fs.rename(Path(tmp_data), data_dest):
-        fs.delete(Path(tmp_data), True)
+    io.delete(f"{root}/{data_rel}")  # stale dir of a crashed run
+    if not io.rename(tmp_data, f"{root}/{data_rel}"):
+        io.delete(tmp_data)
         raise IOError(f"failed to install add-action table for "
                       f"version {version} of {table_path}")
     return data_rel
@@ -859,13 +702,9 @@ def describe_table(spark: SparkSession, table_path: str) -> dict:
                    if a.get("size_bytes") is None]
     if unsized:
         # back-compat probe, scoped to EXACTLY the legacy files
-        fs, jvm = _fs(spark, table_path)
-        Path = jvm.org.apache.hadoop.fs.Path
         root = table_path.rstrip("/")
-        for p0 in unsized:
-            p = Path(_abs(root, p0))
-            if fs.exists(p):
-                size += fs.getFileStatus(p).getLen()
+        size += sum(_existing_files(
+            spark, [_abs(root, p) for p in unsized]).values())
     debt = dv_debt(spark, table_path)
     sch = table_schema(spark, table_path)
     return {"version": commits[-1]["version"],
@@ -1645,8 +1484,7 @@ def _write_data_files(spark: SparkSession, table_path: str,
                 if p["kind"] != "identity"}
 
     def _one_add(rel_src: str, size: int) -> tuple[str, dict]:
-        """(final rel path, add-action) for one staged file — the
-        shared placement logic of both lanes below."""
+        """(final rel path, add-action) for one staged file."""
         pvals: dict = {}
         dest_segs: list[str] = []
         for seg in rel_src.split("/")[:-1]:
@@ -1677,54 +1515,19 @@ def _write_data_files(spark: SparkSession, table_path: str,
                 add["spec"] = spec_rec
         return final, add
 
+    # Spark's .crc sidecars stay behind in the staging dir and go
+    # with it (a missing checksum sidecar is always acceptable to
+    # Hadoop readers: absence means "unverified", not an error)
+    io = fileio.file_io(spark, root)
     adds = []
-    local_root = _local_fs_path(root, spark)
-    if local_root is not None:
-        # local placement lane (round-11, same class as the local log
-        # listing): the Hadoop loop costs ~4 py4j round trips per
-        # written file (status, name, mkdirs, rename); os.walk +
-        # os.replace do the identical renames driver-side. Spark's
-        # .crc sidecars stay behind in the staging dir and are
-        # removed with it (a missing checksum sidecar is always
-        # acceptable to Hadoop readers — absence means "unverified",
-        # not an error).
-        import shutil as _sh
-        tmp_l = os.path.join(local_root, tmp_rel)
-        if subdir:
-            os.makedirs(os.path.join(local_root, subdir.rstrip("/")),
-                        exist_ok=True)
-        for dirpath, _dirs, files in os.walk(tmp_l):
-            _dirs.sort()  # deterministic placement order
-            for name in sorted(files):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, name)
-                rel_src = os.path.relpath(src, tmp_l).replace(os.sep, "/")
-                final, add = _one_add(rel_src, os.stat(src).st_size)
-                dst = os.path.join(local_root, final)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(src, dst)
-                adds.append(add)
-        _sh.rmtree(tmp_l, ignore_errors=True)
-    else:
-        fs, jvm = _fs(spark, table_path)
-        Path = jvm.org.apache.hadoop.fs.Path
-        if subdir:
-            fs.mkdirs(Path(f"{root}/{subdir.rstrip('/')}"))
-        it = fs.listFiles(Path(tmp_dir), True)
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if not name.endswith(".parquet"):
-                continue
-            rel_src = _rel_path(str(st.getPath()), tmp_dir)
-            final, add = _one_add(rel_src, st.getLen())
-            if "/" in final:
-                fs.mkdirs(Path(f"{root}/{final.rsplit('/', 1)[0]}"))
-            if not fs.rename(st.getPath(), Path(f"{root}/{final}")):
-                raise IOError(f"failed to place data file {final}")
-            adds.append(add)
-        fs.delete(Path(tmp_dir), True)
+    for e in io.walk_files(tmp_dir):
+        if not e.name.endswith(".parquet"):
+            continue
+        final, add = _one_add(e.name, e.size)
+        if not io.rename(e.path, f"{root}/{final}"):
+            raise IOError(f"failed to place data file {final}")
+        adds.append(add)
+    io.delete(tmp_dir)
     _annotate_adds(spark, root, adds, df.columns, keys,
                    stat_cols=stat_cols, bloom_cols=bloom_cols,
                    bloom_bits=bloom_bits, bloom_hashes=bloom_hashes)
@@ -1734,8 +1537,9 @@ def _write_data_files(spark: SparkSession, table_path: str,
 def _footer_stats(root: str, adds: list[dict], cols: list[str],
                   spark: SparkSession | None = None,
                   strings: bool = True) -> dict | None:
-    """Per-file (rows, {col: (min, max)}) read from LOCAL parquet
-    FOOTERS — the write-time stats the Spark scan job recomputes.
+    """Per-file (rows, {col: (min, max)}) read from parquet FOOTERS
+    (the seam's ``footer``) — the write-time stats the Spark scan job
+    recomputes.
     Applies only when every stat column is a top-level integer,
     float or plain (UTF8_BINARY) string leaf. Fixed-width statistics
     are exact by format definition; string statistics are exact
@@ -1748,15 +1552,12 @@ def _footer_stats(root: str, adds: list[dict], cols: list[str],
     timestamp / decimal / date columns (they round-trip through
     different Python types than the Spark collect lane) and a double
     chunk containing NaN (no footer min/max, by parquet-format rule)
-    return None, as do a non-local root and any error: callers then
-    fall back to the Spark lane unchanged. Otherwise returns
-    ``{add-path: (rows, {col: (mn, mx)})}``.
+    return None, as do a filesystem without driver-side footers and
+    any error: callers then run the Spark stats job instead.
+    Otherwise returns ``{add-path: (rows, {col: (mn, mx)})}``.
 
-    Scale note: O(adds) small local footer reads on the driver,
-    bounded by the write's own file count, never table size."""
-    local_root = _local_fs_path(root, spark)
-    if local_root is None:
-        return None
+    Scale note: O(adds) small footer reads on the driver, bounded by
+    the write's own file count, never table size."""
     spark = spark or SparkSession.getActiveSession()
     trunc = "parquet.statistics.truncate.length"
     try:
@@ -1764,13 +1565,15 @@ def _footer_stats(root: str, adds: list[dict], cols: list[str],
                 or spark._jsc.hadoopConfiguration().get(trunc) is not None:
             return None
         import pyarrow as _pa
-        import pyarrow.parquet as _pq
+        io = fileio.file_io(spark, root)
         out: dict = {}
         for a in adds:
-            pf = _pq.ParquetFile(os.path.join(local_root, a["path"]))
-            arrow = pf.schema_arrow
+            md = io.footer(_abs(root, a["path"]))
+            if md is None:
+                return None
+            arrow = md.schema.to_arrow_schema()
             collated = set()
-            row_meta = (pf.metadata.metadata or {}).get(
+            row_meta = (md.metadata or {}).get(
                 b"org.apache.spark.sql.parquet.row.metadata")
             if row_meta:
                 collated = {f["name"] for f in json.loads(row_meta)["fields"]
@@ -1783,9 +1586,8 @@ def _footer_stats(root: str, adds: list[dict], cols: list[str],
                 if not (_pa.types.is_integer(t) or _pa.types.is_floating(t)
                         or (strings and _pa.types.is_string(t))):
                     return None
-            md = pf.metadata
             if md.num_rows == 0:
-                # the Spark lane's groupBy never yields a row for an
+                # the Spark stats job never yields a row for an
                 # empty file — leave the add unannotated there too
                 continue
             leaf = {md.row_group(0).column(i).path_in_schema: i
@@ -2043,16 +1845,16 @@ def convert_to_table(spark: SparkSession, table_path: str,
     if current_version(spark, table_path) != 0:
         raise ValueError(f"{table_path} already has a commit log")
     _invalidate_doc_cache(table_path)  # recreate-at-same-path safety
-    fs, jvm = _fs(spark, table_path)
     root = table_path.rstrip("/")
     adds: list[dict] = []
-    for rel, _p, sz in _data_files_on_disk(fs, jvm, root):
+    for e in _data_files_on_disk(spark, root):
+        rel = e.name
         pvals: dict = {}
         for seg in rel.split("/")[:-1]:
             col, _, raw = seg.partition("=")
             pvals[col] = (None if raw == "__HIVE_DEFAULT_PARTITION__"
                           else unquote(raw))
-        add: dict = {"path": rel, "size_bytes": sz}
+        add: dict = {"path": rel, "size_bytes": e.size}
         if pvals:
             add["partition"] = pvals
         adds.append(add)
@@ -2992,9 +2794,8 @@ def _delete_rel(spark: SparkSession, table_path: str, rel: str) -> None:
     """Best-effort delete of a table-relative file (losing-writer
     cleanup: a sidecar written ahead of a commit that lost the race
     must not linger as an orphan)."""
-    fs, jvm = _fs(spark, table_path)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(
-        f"{table_path.rstrip('/')}/{rel}"), False)
+    fileio.file_io(spark, table_path).delete(
+        f"{table_path.rstrip('/')}/{rel}")
 
 
 def _write_dv_sidecar(spark: SparkSession, table_path: str,
@@ -3004,23 +2805,19 @@ def _write_dv_sidecar(spark: SparkSession, table_path: str,
     path (the underscore prefix keeps every maintenance listing away
     from it)."""
     root = table_path.rstrip("/")
-    fs, jvm = _fs(spark, table_path)
-    Path = jvm.org.apache.hadoop.fs.Path
+    io = fileio.file_io(spark, table_path)
     tmp_dir = f"{root}/.stage-{uuid.uuid4().hex}"
     hits.coalesce(1).write.parquet(tmp_dir)
     rel = f"{_DV_DIR}/dv-{uuid.uuid4().hex}.parquet"
-    fs.mkdirs(Path(f"{root}/{_DV_DIR}"))
-    placed = False
-    for st in fs.listStatus(Path(tmp_dir)):
-        name = st.getPath().getName()
-        if name.endswith(".parquet"):
-            if not fs.rename(st.getPath(), Path(f"{root}/{rel}")):
-                raise IOError(f"failed to place deletion vector {rel}")
-            placed = True
-            break
-    fs.delete(Path(tmp_dir), True)
-    if not placed:
-        raise IOError("deletion-vector write produced no parquet file")
+    part = next((e for e in io.list(tmp_dir)
+                 if e.name.endswith(".parquet")), None)
+    try:
+        if part is None:
+            raise IOError("deletion-vector write produced no parquet file")
+        if not io.rename(part.path, f"{root}/{rel}"):
+            raise IOError(f"failed to place deletion vector {rel}")
+    finally:
+        io.delete(tmp_dir)
     return rel
 
 
@@ -3216,8 +3013,6 @@ def restore_table(spark: SparkSession, table_path: str,
                 f"restore_table: version {version} not in log "
                 f"(have {sorted(known)}; earlier history may be expired)")
         base_version = commits[-1]["version"]
-        fs, jvm = _fs(spark, table_path)
-        Path = jvm.org.apache.hadoop.fs.Path
         root = table_path.rstrip("/")
         target_df = _adds_df_at(spark, table_path, version)
         if target_df is not None:
@@ -3237,8 +3032,8 @@ def restore_table(spark: SparkSession, table_path: str,
         want = {_abs(root, p): p for p in tgt}
         want.update({_abs(root, r): r for r in
                      _dv_rels(spark, table_path, version=version)})
-        have = _existing_files(fs, jvm, want.keys())
-        missing = sorted(want[a] for a in set(want) - have)
+        have = _existing_files(spark, want.keys())
+        missing = sorted(want[a] for a in set(want) - set(have))
         if missing:
             raise FileNotFoundError(
                 f"restore_table: {len(missing)} data/deletion-vector "
@@ -3470,8 +3265,7 @@ def vacuum(spark: SparkSession, table_path: str,
     (the decision may still land as committed); an ABORTED
     transaction's files are unreferenced by every snapshot and are
     reaped here."""
-    fs, jvm = _fs(spark, table_path)
-    Path = jvm.org.apache.hadoop.fs.Path
+    io = fileio.file_io(spark, table_path)
     root = table_path.rstrip("/")
     live = {_log_ref(f, root)
             for f in snapshot_files(spark, table_path)}
@@ -3482,87 +3276,70 @@ def vacuum(spark: SparkSession, table_path: str,
             if "dv_add" in doc:
                 dv_live.add(doc["dv_add"])
     deleted = []
-    for rel, p, _sz in _data_files_on_disk(fs, jvm, root):
-        if rel not in live:
+    for e in _data_files_on_disk(spark, root):
+        if e.name not in live:
             if not dry_run:
-                fs.delete(p, False)
-            deleted.append(rel)
-    deleted.extend(_reap_dv_files(fs, jvm, root, dv_live, dry_run))
+                io.delete(e.path)
+            deleted.append(e.name)
+    deleted.extend(_reap_dv_files(spark, root, dv_live, dry_run))
     return sorted(deleted)
 
 
-def _reap_dv_files(fs, jvm, root: str, retained_rels: set[str],
+def _reap_dv_files(spark: SparkSession, root: str,
+                   retained_rels: set[str],
                    dry_run: bool = False) -> list[str]:
     """Delete deletion-vector sidecars under ``_dv/`` referenced by no
     retained snapshot (``_data_files_on_disk`` skips underscore dirs
     by design, so maintenance reaps them through this dedicated pass).
     Returns the reaped relative paths."""
-    Path = jvm.org.apache.hadoop.fs.Path
-    dv_dir = Path(f"{root}/{_DV_DIR}")
+    io = fileio.file_io(spark, root)
     removed: list[str] = []
-    if not fs.exists(dv_dir):
-        return removed
-    for st in fs.listStatus(dv_dir):
-        name = st.getPath().getName()
-        if not name.endswith(".parquet") or name.startswith("."):
+    for e in io.list(f"{root}/{_DV_DIR}"):
+        if not e.name.endswith(".parquet") or e.name.startswith("."):
             continue
-        rel = f"{_DV_DIR}/{name}"
+        rel = f"{_DV_DIR}/{e.name}"
         if rel not in retained_rels:
             if not dry_run:
-                fs.delete(st.getPath(), False)
+                io.delete(e.path)
             removed.append(rel)
     return removed
 
 
-def _existing_files(fs, jvm, abs_paths) -> set[str]:
-    """The subset of ``abs_paths`` that exist on disk, probed with ONE
-    ``listStatus`` per DISTINCT PARENT DIRECTORY instead of one
-    ``exists`` RPC per file — at 10⁵-10⁶ files the directory count is
-    orders of magnitude smaller than the file count, and a listing is
-    one round trip regardless of entries. Handles absolute paths into
-    OTHER table roots (shallow-clone inheritance) the same way: the
-    parent grouping never assumes a single root. A missing parent
-    directory simply contributes nothing."""
-    Path = jvm.org.apache.hadoop.fs.Path
+def _existing_files(spark: SparkSession, abs_paths) -> dict[str, int]:
+    """``{path: size}`` for the subset of ``abs_paths`` that exist,
+    probed with ONE listing per DISTINCT PARENT DIRECTORY instead of
+    one ``exists`` RPC per file — at 10⁵-10⁶ files the directory
+    count is orders of magnitude smaller than the file count, and a
+    listing is one round trip regardless of entries. Handles absolute
+    paths into OTHER table roots (shallow-clone inheritance) the same
+    way: the parent grouping never assumes a single root. A missing
+    parent directory simply contributes nothing."""
     by_dir: dict[str, set[str]] = {}
     for p in abs_paths:
         d, _, name = p.rpartition("/")
         by_dir.setdefault(d, set()).add(name)
-    found: set[str] = set()
-    for d, names in by_dir.items():
-        dp = Path(d)
-        if not fs.exists(dp):
-            continue
-        for st in fs.listStatus(dp):
-            name = st.getPath().getName()
-            if name in names:
-                found.add(f"{d}/{name}")
-    return found
+    return {e.path: e.size for d, names in by_dir.items()
+            for e in fileio.file_io(spark, d).list(d)
+            if e.name in names and e.size is not None}
 
 
-def _data_files_on_disk(fs, jvm, root: str):
-    """Yield ``(rel_path, hadoop_path, size_bytes)`` for every
-    COMMITTED-layout data file under the table root: root-level
+def _data_files_on_disk(spark: SparkSession, root: str) -> list:
+    """Every COMMITTED-layout data file under the table root as a
+    seam entry (``name`` = root-relative path): root-level
     ``*.parquet`` plus files under hive-style ``col=value/`` partition
     directories. ``_log/``, dot-directories (``.staged-*`` WAP
     batches, ``.stage-*`` in-flight writes), and dot-files are never
-    yielded — maintenance must not reap an uncommitted batch. The size
-    rides the recursive listing's FileStatus for free (no per-file
-    stat RPCs)."""
-    Path = jvm.org.apache.hadoop.fs.Path
-    it = fs.listFiles(Path(root), True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        rel = _rel_path(str(p), root)
-        if not rel.endswith(".parquet"):
-            continue
-        segs = rel.split("/")
-        if any(s.startswith(".") or s.startswith("_") for s in segs):
-            continue
-        if any("=" not in s for s in segs[:-1]):
-            continue  # not a partition-layout subdir — leave alone
-        yield rel, p, int(st.getLen())
+    listed — maintenance must not reap an uncommitted batch. The size
+    rides the recursive listing for free (no per-file stat RPCs)."""
+    out = []
+    for e in fileio.file_io(spark, root).walk_files(root):
+        segs = e.name.split("/")
+        if (e.name.endswith(".parquet")
+                and not any(s.startswith((".", "_")) for s in segs)
+                # not a partition-layout subdir: leave alone
+                and all("=" in s for s in segs[:-1])):
+            out.append(e)
+    return out
 
 
 def _file_rows(spark: SparkSession, table_path: str) -> dict[str, int | None]:
@@ -4619,8 +4396,7 @@ def expire_snapshots(spark: SparkSession, table_path: str,
     if checkpoint_format not in ("auto", "json", "parquet"):
         raise ValueError("expire_snapshots: checkpoint_format must be "
                          "auto | json | parquet")
-    fs, jvm = _fs(spark, table_path)
-    Path = jvm.org.apache.hadoop.fs.Path
+    io = fileio.file_io(spark, table_path)
     commits = _commits(spark, table_path)
     if not commits:
         raise FileNotFoundError(f"{table_path} has no commit log")
@@ -4648,8 +4424,8 @@ def expire_snapshots(spark: SparkSession, table_path: str,
     from . import lakehouse_meta as meta
     root = table_path.rstrip("/")
     log_dir = f"{root}/{_LOG_DIR}"
-    dest = Path(_ckpt_path(table_path, cutoff))
-    if not fs.exists(dest):
+    dest = _ckpt_path(table_path, cutoff)
+    if not io.exists(dest):
         # (when dest exists a prior crashed run already installed this
         # checkpoint; its content is the same deterministic
         # replay-to-cutoff, so reuse it rather than opening a
@@ -4709,52 +4485,40 @@ def expire_snapshots(spark: SparkSession, table_path: str,
         else:
             doc["add"] = (live_adds if live_adds is not None
                           else meta.rows_to_adds(adds_df.collect()))
-        # durable install: write the checkpoint to a temp name, then
-        # rename to the DISTINCT `<cutoff>.checkpoint.json` final name.
-        # The plain `<cutoff>.json` commit is never touched until the
-        # checkpoint is durably in place (readers prefer the checkpoint
-        # and reset replay at it), so a crash at any point leaves a log
-        # that replays to the correct snapshot — never a hole.
-        tmp_ckpt = Path(f"{log_dir}/.ckpt-{uuid.uuid4().hex}")
-        stream = fs.create(tmp_ckpt, False)
-        try:
-            stream.write(bytearray(json.dumps(doc, sort_keys=True)
-                                   .encode("utf-8")))
-        finally:
-            stream.close()
-        if not fs.rename(tmp_ckpt, dest):
-            fs.delete(tmp_ckpt, False)
+        # durable install under the DISTINCT `<cutoff>.checkpoint.json`
+        # final name. The plain `<cutoff>.json` commit is never touched
+        # until the checkpoint is durably in place (readers prefer the
+        # checkpoint and reset replay at it), so a crash at any point
+        # leaves a log that replays to the correct snapshot — never a
+        # hole.
+        if not io.publish(dest, json.dumps(doc, sort_keys=True)
+                          .encode("utf-8")):
             raise IOError(f"expire_snapshots: failed to install "
                           f"checkpoint for version {cutoff}")
 
-    # 1.5 update the `_last_checkpoint` pointer (AFTER the checkpoint
+    # 1.5 replace the `_last_checkpoint` pointer (AFTER the checkpoint
     # is durable): `_commits` reads it first and parses only the
-    # O(tail) docs at or above the anchor. Plain overwrite — a torn
-    # or stale pointer degrades to the full parse, never to an error.
-    lcp = Path(_last_ckpt_pointer_path(table_path))
-    stream = fs.create(lcp, True)
-    try:
-        stream.write(bytearray(
-            json.dumps({"version": cutoff}).encode("utf-8")))
-    finally:
-        stream.close()
+    # O(tail) docs at or above the anchor. A missing, torn or stale
+    # pointer degrades to the full parse, never to an error.
+    lcp = _last_ckpt_pointer_path(table_path)
+    io.delete(lcp)
+    io.publish(lcp, json.dumps({"version": cutoff}).encode("utf-8"))
 
     # 2. drop the now-shadowed plain commit and EVERYTHING below the
     # cutoff — driven by the directory listing, not the parsed docs,
     # so orphans a prior pointer anchor hid from `_commits` (crash
     # between pointer update and deletion) are reaped too
-    fs.delete(Path(_log_path(table_path, cutoff)), False)
-    for st in fs.listStatus(Path(log_dir)):
-        name = st.getPath().getName()
-        nv = _name_version(name)
+    io.delete(_log_path(table_path, cutoff))
+    for e in io.list(log_dir):
+        nv = _name_version(e.name)
         if nv is not None and nv < cutoff:
-            fs.delete(st.getPath(), True)
-        elif name.startswith(".ckptdata-"):
+            io.delete(e.path)
+        elif e.name.startswith(".ckptdata-"):
             # crash orphan of _install_adds_parquet: the temp dir is
             # only ever in-flight within a single call, and expire is
             # the single-maintenance-owner context — reap it here
             # (vacuum never descends _log/, so nothing else would)
-            fs.delete(st.getPath(), True)
+            io.delete(e.path)
 
     # 3. delete data files no kept version references (files added by
     # a still-PENDING multi-table txn are in no snapshot yet but may
@@ -4768,10 +4532,10 @@ def expire_snapshots(spark: SparkSession, table_path: str,
         if doc.get("_txn") == "pending":
             retained.update(a["path"] for a in doc.get("add", []))
     removed = []
-    for rel, p, _sz in _data_files_on_disk(fs, jvm, root):
-        if rel not in retained:
-            fs.delete(p, False)
-            removed.append(rel)
+    for e in _data_files_on_disk(spark, root):
+        if e.name not in retained:
+            io.delete(e.path)
+            removed.append(e.name)
     # deletion-vector sidecars referenced by no kept version go too
     retained_dv: set[str] = set()
     for v in kept:
@@ -4779,7 +4543,7 @@ def expire_snapshots(spark: SparkSession, table_path: str,
     for doc in _commits(spark, table_path):
         if doc.get("_txn") == "pending" and "dv_add" in doc:
             retained_dv.add(doc["dv_add"])
-    removed.extend(_reap_dv_files(fs, jvm, root, retained_dv))
+    removed.extend(_reap_dv_files(spark, root, retained_dv))
     return {"expired_versions": expired, "kept_versions": kept,
             "files_removed": sorted(removed)}
 
@@ -4845,6 +4609,46 @@ def read_staged(spark: SparkSession, table_path: str,
     return spark.read.parquet(*files)
 
 
+def _move_staged(spark: SparkSession, table_path: str, pending: dict,
+                 who: str) -> list[dict]:
+    """Move a stage's files into the table root (shared by
+    :func:`publish_staged` and the multi-table transaction's
+    prepare); returns the add-actions at their final paths. Every
+    staged file is verified first — one listing per distinct parent
+    dir, not one exists RPC per file (a big stage is 10³-10⁵ files) —
+    so a missing file fails loudly BEFORE any rename or commit."""
+    io = fileio.file_io(spark, table_path)
+    root = table_path.rstrip("/")
+    have = _existing_files(spark,
+                           [f"{root}/{a['path']}" for a in pending["add"]])
+    gone = [a["path"] for a in pending["add"]
+            if f"{root}/{a['path']}" not in have]
+    if gone:
+        raise FileNotFoundError(
+            f"{who}: staged file {gone[0]} is missing "
+            f"from {table_path} — was the stage aborted or the "
+            "staging directory removed?")
+    staged_dir = pending.get("staged_dir") or ""
+    final_adds = []
+    for a in pending["add"]:
+        # preserve the partition-dir tail (everything after the
+        # .staged-*/ prefix) so partitioned stages publish into their
+        # hive-style directories
+        tail = a["path"]
+        if staged_dir and tail.startswith(staged_dir + "/"):
+            tail = tail[len(staged_dir) + 1:]
+        part_dir = tail.rsplit("/", 1)[0] if "/" in tail else ""
+        prefix = f"{part_dir}/" if part_dir else ""
+        final = f"{prefix}part-{uuid.uuid4().hex}.parquet"
+        if not io.rename(f"{root}/{a['path']}", f"{root}/{final}"):
+            raise IOError(f"{who}: failed to move staged file "
+                          f"{a['path']} into {table_path}")
+        final_adds.append({**a, "path": final})
+    if staged_dir:
+        io.delete(f"{root}/{staged_dir}")
+    return final_adds
+
+
 def publish_staged(spark: SparkSession, table_path: str,
                    pending: dict) -> int:
     """WAP step 3a (PUBLISH): move the audited files from the staging
@@ -4853,8 +4657,6 @@ def publish_staged(spark: SparkSession, table_path: str,
     written, never after), then commit them atomically, retrying the
     commit against the current version (appends never conflict on
     content). Returns the new version."""
-    fs, jvm = _fs(spark, table_path)
-    Path = jvm.org.apache.hadoop.fs.Path
     root = table_path.rstrip("/")
     cons = table_constraints(spark, table_path)
     if cons and pending["add"]:
@@ -4868,39 +4670,7 @@ def publish_staged(spark: SparkSession, table_path: str,
         _enforce_constraints(read_staged(spark, table_path, pending),
                              cons, f"publish_staged on {table_path}")
     enforced = set(cons.items())
-    # batched existence check (one listing per distinct parent dir,
-    # not one exists RPC per staged file — a big stage is 10³-10⁵
-    # files): a missing file fails loudly BEFORE any rename or commit
-    have = _existing_files(fs, jvm,
-                           [f"{root}/{a['path']}" for a in pending["add"]])
-    gone = [a["path"] for a in pending["add"]
-            if f"{root}/{a['path']}" not in have]
-    if gone:
-        raise FileNotFoundError(
-            f"publish_staged: staged file {gone[0]} is missing "
-            f"from {table_path} — was the stage aborted or the "
-            "staging directory removed?")
-    final_adds = []
-    for a in pending["add"]:
-        src = Path(f"{root}/{a['path']}")
-        # preserve the partition-dir tail (everything after the
-        # .staged-*/ prefix) so partitioned stages publish into their
-        # hive-style directories
-        staged_dir = pending.get("staged_dir") or ""
-        tail = a["path"]
-        if staged_dir and tail.startswith(staged_dir + "/"):
-            tail = tail[len(staged_dir) + 1:]
-        part_dir = tail.rsplit("/", 1)[0] if "/" in tail else ""
-        prefix = f"{part_dir}/" if part_dir else ""
-        final = f"{prefix}part-{uuid.uuid4().hex}.parquet"
-        if part_dir:
-            fs.mkdirs(Path(f"{root}/{part_dir}"))
-        if not fs.rename(src, Path(f"{root}/{final}")):
-            raise IOError(f"publish_staged: failed to move staged "
-                          f"file {a['path']} into the table root")
-        final_adds.append({**a, "path": final})
-    if pending.get("staged_dir"):
-        fs.delete(Path(f"{root}/{pending['staged_dir']}"), True)
+    final_adds = _move_staged(spark, table_path, pending, "publish_staged")
     # a pending staged by a pre-upgrade build lacks df_schema: derive
     # the staged batch's schema from the (now published-in-place)
     # files' footers ONCE, so the evolution restatement below can
@@ -4969,27 +4739,24 @@ def abort_staged(spark: SparkSession, table_path: str,
     holds every file under it, so the abort is ONE recursive delete —
     not a per-file RPC loop; the loop survives only for legacy
     pendings without the field."""
-    fs, jvm = _fs(spark, table_path)
-    Path = jvm.org.apache.hadoop.fs.Path
+    io = fileio.file_io(spark, table_path)
     root = table_path.rstrip("/")
     if pending.get("staged_dir"):
-        sd = Path(f"{root}/{pending['staged_dir']}")
+        sd = f"{root}/{pending['staged_dir']}"
         # a failed recursive delete (permissions, concurrent removal
         # mid-walk) must not report success and leak the staged batch
         # on disk: check the delete's verdict AND that the dir is
         # gone (delete returns False for an already-absent path,
         # which IS a clean abort — e.g. a re-run after a crash)
-        if not fs.delete(sd, True) and fs.exists(sd):
+        if not io.delete(sd) and io.exists(sd):
             raise IOError(
                 f"abort_staged: failed to delete staged dir "
                 f"{pending['staged_dir']} under {table_path}; the "
                 "staged batch is still on disk")
         return sorted(a["path"] for a in pending["add"])
-    removed = []
     for a in pending["add"]:
-        fs.delete(Path(f"{root}/{a['path']}"), False)
-        removed.append(a["path"])
-    return sorted(removed)
+        io.delete(f"{root}/{a['path']}")
+    return sorted(a["path"] for a in pending["add"])
 
 
 # ---------------------------------------------------------------------------
@@ -5051,9 +4818,7 @@ def maintenance_plan(spark: SparkSession, table_path: str,
     small_frac = (len(small) / len(known)) if known else 0.0
     debt = {"dv_rows": prof["n_dv_deleted_rows"],
             "fraction": prof["dv_debt_fraction"]}
-    fs, jvm = _fs(spark, table_path)
-    on_disk = sum(1 for _ in _data_files_on_disk(
-        fs, jvm, table_path.rstrip("/")))
+    on_disk = len(_data_files_on_disk(spark, table_path.rstrip("/")))
     actions: list[str] = []
     reasons: dict[str, str] = {}
     # a SINGLE sub-target file is already optimally packed — only
@@ -5098,26 +4863,20 @@ def discover_tables(spark: SparkSession, root_dir: str,
     and does NOT descend into it (partition subdirectories are not
     tables). One listing per visited directory — at a 10^3-table
     catalog root this is O(dirs), no file-level traffic."""
-    fs, jvm = _fs(spark, root_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    root = root_dir.rstrip("/")
-    if not fs.exists(Path(root)):
-        return []
+    io = fileio.file_io(spark, root_dir)
     tables: list[str] = []
-    frontier = [root]
+    frontier = [root_dir.rstrip("/")]
     for _ in range(max_depth):
         nxt: list[str] = []
         for d in frontier:
-            if fs.exists(Path(f"{d}/{_LOG_DIR}")):
+            subdirs = [e for e in io.list(d) if e.size is None]
+            if any(e.name == _LOG_DIR for e in subdirs):
                 tables.append(d)
                 continue
-            for st in fs.listStatus(Path(d)):
-                if st.isDirectory():
-                    name = st.getPath().getName()
-                    if not name.startswith((".", "_")):
-                        # rebuild from the parent string so scheme'd
-                        # roots (s3a://...) keep their scheme
-                        nxt.append(f"{d}/{name}")
+            # entry paths extend the parent string, so scheme'd roots
+            # (s3a://...) keep their scheme
+            nxt.extend(e.path for e in subdirs
+                       if not e.name.startswith((".", "_")))
         frontier = nxt
         if not frontier:
             break

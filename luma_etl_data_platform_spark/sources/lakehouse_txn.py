@@ -10,8 +10,8 @@ durability with no repair step.
 
 Protocol — two-phase commit with an ATOMIC DECISION RECORD (the
 classic "presumed abort" shape; same primitive as the per-table
-commit log — a filesystem rename that fails when the destination
-exists, so exactly one outcome ever exists):
+commit log — the filesystem seam's atomic publish-if-absent, so
+exactly one outcome ever exists):
 
 1. **stage** (per table): data files land under ``.staged-*/``
    subdirectories (invisible to readers, protected from vacuum and
@@ -24,7 +24,7 @@ exists, so exactly one outcome ever exists):
    ``committed`` — the version slot is consumed either way, so
    concurrent single-table writers are never blocked and never race
    a reused version.
-3. **decide**: one rename-if-absent of ``<status_dir>/<txn_id>.json``
+3. **decide**: one publish-if-absent of ``<status_dir>/<txn_id>.json``
    containing ``{"status": "committed"}``. This is the atomic point:
    before it, every prepared commit is a no-op tombstone; after it,
    all of them are visible. :func:`abort` (or a maintenance owner via
@@ -36,7 +36,7 @@ Crash analysis: a crash before any prepare leaves only staged files
 (cleaned by :func:`MultiTableTransaction.abort` or left inert);
 between prepares leaves pending tombstones whose files vacuum/expire
 retain until :func:`force_abort_pending` resolves them; after the
-decision rename the transaction is durably committed and every
+decision publish the transaction is durably committed and every
 reader's next log replay surfaces all tables' adds.
 
 Visibility caveat (documented, not hidden): the decision flips all
@@ -54,6 +54,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import fileio
 from . import lakehouse as lh
 
 
@@ -63,25 +64,15 @@ class TransactionAborted(RuntimeError):
 
 def _write_decision(spark: SparkSession, status_dir: str, txn_id: str,
                     status: str) -> str:
-    """Race-safe decision write: rename-if-absent of the status file.
+    """Race-safe decision write: publish-if-absent of the status file.
     Returns the FINAL status (ours if we won, the winner's if not)."""
-    fs, jvm = lh._fs(spark, status_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
     root = status_dir.rstrip("/")
-    fs.mkdirs(Path(root))
-    tmp = Path(f"{root}/.tmp-{uuid.uuid4().hex}")
-    stream = fs.create(tmp, False)
-    try:
-        stream.write(bytearray(
+    if fileio.file_io(spark, root).publish(
+            f"{root}/{txn_id}.json",
             json.dumps({"txn_id": txn_id, "status": status},
-                       sort_keys=True).encode("utf-8")))
-    finally:
-        stream.close()
-    dest = Path(f"{root}/{txn_id}.json")
-    if fs.rename(tmp, dest):
+                       sort_keys=True).encode("utf-8")):
         lh._TXN_FINAL[(root, txn_id)] = status
         return status
-    fs.delete(tmp, False)
     return lh.txn_state(spark, status_dir, txn_id)
 
 
@@ -158,39 +149,8 @@ class MultiTableTransaction:
         """Move staged files into the table root and write the
         txn-marked commit doc, retrying version races (appends never
         conflict on content — same loop as publish_staged)."""
-        fs, jvm = lh._fs(self.spark, table_path)
-        Path = jvm.org.apache.hadoop.fs.Path
-        root = table_path.rstrip("/")
-        # batched existence check — same one-listing-per-parent-dir
-        # shape as publish_staged (never one exists RPC per file)
-        have = lh._existing_files(
-            fs, jvm, [f"{root}/{a['path']}" for a in pending["add"]])
-        gone = [a["path"] for a in pending["add"]
-                if f"{root}/{a['path']}" not in have]
-        if gone:
-            raise FileNotFoundError(
-                f"txn prepare: staged file {gone[0]} is missing "
-                f"from {table_path}")
-        final_adds = []
-        for a in pending["add"]:
-            src = Path(f"{root}/{a['path']}")
-            # preserve a partitioned stage's hive-dir tail, as in
-            # publish_staged
-            staged_dir = pending.get("staged_dir") or ""
-            tail = a["path"]
-            if staged_dir and tail.startswith(staged_dir + "/"):
-                tail = tail[len(staged_dir) + 1:]
-            part_dir = tail.rsplit("/", 1)[0] if "/" in tail else ""
-            prefix = f"{part_dir}/" if part_dir else ""
-            final = f"{prefix}part-{uuid.uuid4().hex}.parquet"
-            if part_dir:
-                fs.mkdirs(Path(f"{root}/{part_dir}"))
-            if not fs.rename(src, Path(f"{root}/{final}")):
-                raise IOError(f"txn prepare: failed to move staged "
-                              f"file {a['path']} into {table_path}")
-            final_adds.append({**a, "path": final})
-        if pending.get("staged_dir"):
-            fs.delete(Path(f"{root}/{pending['staged_dir']}"), True)
+        final_adds = lh._move_staged(self.spark, table_path, pending,
+                                     "txn prepare")
         for _ in range(5):
             v = lh.current_version(self.spark, table_path)
             doc = {"version": v + 1, "op": "txn_append",
@@ -216,7 +176,7 @@ def force_abort_pending(spark: SparkSession, table_path: str) -> dict:
     """Maintenance: resolve every PENDING transaction commit in
     ``table_path``'s log by racing an ``aborted`` decision against it.
     A transaction whose coordinator already decided keeps its outcome
-    (the rename-if-absent loses); a crashed coordinator's transaction
+    (the publish-if-absent loses); a crashed coordinator's transaction
     becomes aborted, unblocking snapshot expiration and letting vacuum
     reap its files. Returns {txn_id: final_status}."""
     out: dict[str, str] = {}

@@ -35,14 +35,19 @@ from __future__ import annotations
 import json
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from ..sources import fileio
 
 
 class ChangeFeedLedger:
     """Append-only parquet ledger of processed commit versions (the
-    ``ProcessedIdLedger`` shape, keyed by version).
+    ``ProcessedIdLedger`` shape, keyed by version): one single-column
+    int64 file per :meth:`record`, written and read on the driver
+    with pyarrow over the filesystem seam's bytes — a record is table
+    METADATA, like a commit doc, not a Spark job.
 
     File-count hygiene: each :meth:`record` appends one tiny parquet
     file, so a years-long feed would accumulate one file per commit
@@ -52,10 +57,9 @@ class ChangeFeedLedger:
     reset the bound) the ledger is rewritten to a single file —
     steady-state file count is O(compact_every), not O(feed
     lifetime). Compaction is crash-safe by construction: the
-    compacted file lands via rename BEFORE the originals are deleted,
+    compacted file is published BEFORE the originals are deleted,
     and a crash in between only leaves duplicate version rows, which
-    every reader already collapses (``processed`` builds a set,
-    ``summary`` reads ``.distinct()``).
+    every reader collapses into a set.
 
     The feed's STARTING version is pinned write-once in
     ``_feed_start`` (underscore-prefixed: invisible to the parquet
@@ -67,262 +71,102 @@ class ChangeFeedLedger:
     (ADVICE r7).
     """
 
-    _SCHEMA = T.StructType([
-        T.StructField("version", T.LongType(), False),
-    ])
+    _SCHEMA = pa.schema([pa.field("version", pa.int64(), nullable=False)])
 
     def __init__(self, spark: SparkSession, path: str,
                  compact_every: int = 64):
-        self.spark = spark
-        self.path = path
+        self.path = path.rstrip("/")
         self.compact_every = max(int(compact_every), 2)
+        self._io = fileio.file_io(spark, self.path)
         self._files = None  # lazily counted once per ledger instance
 
+    def _entries(self) -> list:
+        """The ledger's parquet data files (markers and dotted temp
+        files excluded — the set the parquet reader sees)."""
+        return [e for e in self._io.list(self.path)
+                if e.size is not None
+                and not e.name.startswith(("_", "."))]
+
+    def _write(self, name: str, versions) -> None:
+        buf = pa.BufferOutputStream()
+        pq.write_table(pa.table({"version": sorted(versions)},
+                                schema=self._SCHEMA), buf)
+        self._io.publish(f"{self.path}/{name}", buf.getvalue().to_pybytes())
+
     def processed(self) -> set[int]:
-        """The AUDIT API: every processed version as a driver-side
-        set. Reads the same compacted representation :meth:`summary`
-        polls — one directory listing over the O(compact_every)
-        self-compacted files, duplicate rows (benign crash residue of
-        :meth:`compact`) collapsed before collect. The returned SET is
-        necessarily O(feed lifetime); the streaming path never calls
-        this — it reads :meth:`summary`'s (watermark, exceptions)
-        pair, O(1) on the driver."""
-        local = self._versions_local()
-        if local is not None:
-            return local
-        try:
-            return {int(r["version"]) for r in
-                    (self.spark.read.schema(self._SCHEMA)
-                     .parquet(self.path).select("version")
-                     .distinct().collect())}
-        except Exception:
-            return set()
-
-    def _versions_local(self) -> set[int] | None:
-        """Driver-side read of the ledger's distinct version set
-        (round-11 optimization, same class as :meth:`_record_local`):
-        the ledger is O(compact_every) one-row files of a single
-        int64 column — launching a Spark job (distinct + agg, ~0.3 s
-        of scheduler latency) per catch-up poll to read it is pure
-        fixed cost. pyarrow reads the same files the Spark reader
-        would (markers and dotted temp files excluded, so a
-        concurrent :meth:`record`'s in-flight ``.tmp`` is never
-        seen). Returns None for non-local URIs or on any read error —
-        callers fall back to the Spark lane unchanged."""
-        from ..sources.lakehouse import _local_fs_path
-        local = _local_fs_path(self.path, self.spark)
-        if local is None:
-            return None
-        try:
-            import os as _os
-
-            import pyarrow.parquet as _pq
-            if not _os.path.isdir(local):
-                return set()
+        """Every processed version as a driver-side set, read from the
+        O(compact_every) self-compacted files. A file compacted away
+        between the listing and its read means a newer compacted file
+        holds its rows: list again."""
+        while True:
             out: set[int] = set()
-            for name in _os.listdir(local):
-                if (name.startswith("_") or name.startswith(".")
-                        or _os.path.isdir(_os.path.join(local, name))):
-                    continue
-                col = _pq.read_table(_os.path.join(local, name),
-                                     columns=["version"])["version"]
-                out.update(int(v) for v in col.to_pylist()
-                           if v is not None)
-            return out
-        except Exception:
-            return None
+            for e in self._entries():
+                data = self._io.read_bytes(e.path)
+                if data is None:
+                    break
+                out.update(pq.read_table(pa.BufferReader(data))
+                           ["version"].to_pylist())
+            else:
+                return out
 
     def summary(self) -> tuple[int | None, set[int]]:
         """``(watermark, exceptions)``: the contiguous-prefix high
         mark (every version from the feed's first processed version
         through ``watermark`` is recorded) plus the out-of-order
-        versions above it. Gap-finding runs as ONE Spark anti-join
-        over the ledger — the driver receives the watermark and the
-        (small, usually empty) exception set, never the full version
-        list, so a years-long feed's catch-up poll stays O(1) on the
-        driver."""
+        versions above it (small, usually empty)."""
         _mn, wm, exc = self._summary_full()
         return wm, exc
 
     def _summary_full(self) -> tuple[int | None, int | None, set[int]]:
         """``(min_recorded, watermark, exceptions)`` — the summary
-        plus the feed's lowest recorded version (one shared agg).
-        Local ledgers resolve driver-side (:meth:`_versions_local`);
-        the Spark lane below is the non-local/fallback path and
-        computes the identical triple."""
-        vs = self._versions_local()
-        if vs is not None:
-            if not vs:
-                return None, None, set()
-            mn, mx = min(vs), max(vs)
-            if len(vs) == mx - mn + 1:
-                return mn, mx, set()
-            # first hole above mn: watermark is the version just
-            # below it (same contract as the Spark gap-finding join)
-            hole = next((v for v in range(mn + 1, mx + 1)
-                         if v not in vs), None)
-            if hole is None:
-                return mn, mx, set()
-            wm = hole - 1
-            return mn, wm, {v for v in vs if v > wm}
-        # non-local (s3a-style) ledger: ONE Spark job per poll
-        # (round-12, verdict item 9 — formerly two/three sequential
-        # jobs on the holed path): the min/max row, the first hole of
-        # the gap-finding anti-join, and the above-watermark exception
-        # versions all come back in a single union'd collect.
-        try:
-            df = (self.spark.read.schema(self._SCHEMA)
-                  .parquet(self.path).select("version").distinct())
-            aggf = df.agg(F.max("version").alias("mx"),
-                          F.min("version").alias("mn"))
-            fh = (df.select((F.col("version") + 1).alias("version"))
-                  .join(df, "version", "left_anti")
-                  .crossJoin(aggf.select("mx"))
-                  .filter(F.col("version") <= F.col("mx"))
-                  .agg(F.min("version").alias("fh")))
-            marker = aggf.crossJoin(fh).select(
-                F.lit(0).alias("_t"), "mn", "mx", "fh",
-                F.lit(None).cast("long").alias("version"))
-            excs = (df.crossJoin(fh)
-                    .filter(F.col("version") >= F.col("fh"))
-                    .select(F.lit(1).alias("_t"),
-                            F.lit(None).cast("long").alias("mn"),
-                            F.lit(None).cast("long").alias("mx"),
-                            F.lit(None).cast("long").alias("fh"),
-                            "version"))
-            rows = marker.unionByName(excs).collect()
-        except Exception:
+        plus the feed's lowest recorded version."""
+        vs = self.processed()
+        if not vs:
             return None, None, set()
-        agg_row = next(r for r in rows if r["_t"] == 0)
-        if agg_row["mx"] is None:
-            return None, None, set()
-        mn, mx = int(agg_row["mn"]), int(agg_row["mx"])
-        if agg_row["fh"] is None:
-            return mn, mx, set()  # contiguous: no hole below the max
-        wm = int(agg_row["fh"]) - 1
-        return mn, wm, {int(r["version"]) for r in rows if r["_t"] == 1}
-
-    def _hfs(self):
-        from ..sources.lakehouse import _fs
-        fs, jvm = _fs(self.spark, self.path)
-        return fs, jvm, jvm.org.apache.hadoop.fs.Path
-
-    def _data_files(self, fs, Path):
-        """The ledger's parquet data files (markers and hidden files
-        excluded — the same set the parquet reader sees)."""
-        root = Path(self.path)
-        if not fs.exists(root):
-            return []
-        return [s.getPath() for s in fs.listStatus(root)
-                if s.isFile()
-                and not s.getPath().getName().startswith("_")
-                and not s.getPath().getName().startswith(".")]
+        mn, mx = min(vs), max(vs)
+        if len(vs) == mx - mn + 1:
+            return mn, mx, set()
+        # the watermark sits just below the first hole above mn
+        wm = next(v for v in range(mn + 1, mx + 1) if v not in vs) - 1
+        return mn, wm, {v for v in vs if v > wm}
 
     def record(self, version: int) -> None:
         if self._files is None:
-            fs, _jvm, Path = self._hfs()
-            self._files = len(self._data_files(fs, Path))
-        if not self._record_local(version):
-            from ..core.localframe import local_frame
-            (local_frame(self.spark, [(int(version),)], self._SCHEMA)
-             .coalesce(1).write.mode("append").parquet(self.path))
+            self._files = len(self._entries())
+        self._write(f"part-{uuid.uuid4().hex}-v{int(version)}.parquet",
+                    [int(version)])
         self._files += 1
         if self._files >= self.compact_every:
             self.compact()
 
-    def _record_local(self, version: int) -> bool:
-        """Driver-side append of the one-row ledger file (round-11
-        optimization): a ledger record is table METADATA — one int64
-        — and belongs on the driver next to the commit-log JSON
-        writes, not in a Spark write job (~0.25 s of scheduler
-        latency per streamed version, §5 of the optimization guide:
-        the driver should do no data work, but this is not data
-        work). pyarrow writes the same footer schema the Spark reader
-        imposes; the file lands under a dotted temp name and renames
-        in, so a concurrent ``summary`` poll never reads a partial
-        file. Non-local ledger URIs (s3a://…) keep the Spark write —
-        pyarrow has no Hadoop filesystem here. Returns True when the
-        local fast path handled the append."""
-        from ..sources.lakehouse import _local_fs_path
-        local = _local_fs_path(self.path, self.spark)
-        if local is None:
-            return False
-        try:
-            import os as _os
-            import uuid as _uuid
-
-            import pyarrow as _pa
-            import pyarrow.parquet as _pq
-            _os.makedirs(local, exist_ok=True)
-            name = f"part-{_uuid.uuid4().hex}-v{int(version)}.parquet"
-            tmp = _os.path.join(local, f".{name}.tmp")
-            table = _pa.Table.from_arrays(
-                [_pa.array([int(version)], _pa.int64())],
-                schema=_pa.schema(
-                    [_pa.field("version", _pa.int64(), nullable=False)]))
-            _pq.write_table(table, tmp)
-            _os.replace(tmp, _os.path.join(local, name))
-            return True
-        except Exception:
-            return False
-
     def compact(self) -> None:
         """Rewrite the ledger to one parquet file. Order of
         operations makes every crash point benign: (1) the distinct
-        version set is written to a hidden side dir, (2) its single
-        part file is RENAMED into the ledger (atomic; a crash before
-        this loses only the side dir), (3) the superseded originals
-        are deleted (a crash between 2 and 3 leaves duplicate rows —
-        readers distinct/set them away)."""
-        fs, _jvm, Path = self._hfs()
-        old = self._data_files(fs, Path)
+        version set is published as a new file, (2) the superseded
+        originals are deleted (a crash between 1 and 2 leaves
+        duplicate rows — readers set them away)."""
+        old = self._entries()
         if len(old) <= 1:
             self._files = len(old)
             return
-        tmp = f"{self.path.rstrip('/')}/.compact-{uuid.uuid4().hex}"
-        (self.spark.read.schema(self._SCHEMA).parquet(self.path)
-         .select("version").distinct().coalesce(1)
-         .write.mode("overwrite").parquet(tmp))
-        parts = [s.getPath() for s in fs.listStatus(Path(tmp))
-                 if s.isFile() and s.getPath().getName().startswith("part-")]
-        dest = Path(f"{self.path.rstrip('/')}/"
-                    f"compacted-{uuid.uuid4().hex}.parquet")
-        if not fs.rename(parts[0], dest):
-            fs.delete(Path(tmp), True)
-            raise IOError(f"ledger compaction: rename into {dest} failed")
-        fs.delete(Path(tmp), True)
-        for p in old:
-            fs.delete(p, False)
+        self._write(f"compacted-{uuid.uuid4().hex}.parquet",
+                    self.processed())
+        for e in old:
+            self._io.delete(e.path)
         self._files = 1
 
     # -- feed start pinning (ADVICE r7) --------------------------------
     def start_version(self) -> int | None:
         """The pinned starting version, or None for a fresh/legacy
         ledger."""
-        fs, jvm, Path = self._hfs()
-        p = Path(f"{self.path.rstrip('/')}/_feed_start")
-        if not fs.exists(p):
-            return None
-        from ..sources.lakehouse import _read_text
-        return int(json.loads(_read_text(fs, jvm, str(p)))["from_version"])
+        text = self._io.read_text(f"{self.path}/_feed_start")
+        return None if text is None else int(json.loads(text)["from_version"])
 
     def pin_start(self, version: int) -> None:
-        """Write-once pin of the feed's starting version (tmp +
-        rename; concurrent pinners race harmlessly — first wins)."""
-        fs, _jvm, Path = self._hfs()
-        fs.mkdirs(Path(self.path))
-        dest = Path(f"{self.path.rstrip('/')}/_feed_start")
-        if fs.exists(dest):
-            return
-        tmp = Path(f"{self.path.rstrip('/')}/.feed_start-{uuid.uuid4().hex}")
-        stream = fs.create(tmp, False)
-        try:
-            stream.write(bytearray(json.dumps(
-                {"from_version": int(version)}).encode("utf-8")))
-        finally:
-            stream.close()
-        if not fs.rename(tmp, dest):
-            fs.delete(tmp, False)  # another pinner won — keep theirs
+        """Write-once pin of the feed's starting version (concurrent
+        pinners race harmlessly — first wins)."""
+        self._io.publish(f"{self.path}/_feed_start", json.dumps(
+            {"from_version": int(version)}).encode("utf-8"))
 
 
 def stream_changes(spark: SparkSession, table_path: str, apply_fn,
@@ -347,7 +191,7 @@ def stream_changes(spark: SparkSession, table_path: str, apply_fn,
     that one version — apply must be idempotent per version, which
     any keyed MERGE/overwrite-by-version sink is. The skip check reads
     the ledger's :meth:`ChangeFeedLedger.summary` — a contiguous
-    watermark plus a small exception set, never the full version list.
+    watermark plus a small exception set.
 
     ``max_versions_per_trigger`` caps how many versions one call
     applies (Delta's ``maxFilesPerTrigger`` analogue for a capped

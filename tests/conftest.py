@@ -1,16 +1,7 @@
 from __future__ import annotations
 
-import os
-
 import duckdb
 import pytest
-
-# Mechanical enforcement of the commit-doc cache's no-in-place-
-# mutation invariant: under the test suite, cached docs are frozen
-# (lakehouse._freeze_json) so a consumer that mutates a shared
-# add-action trips FrozenDocError at the mutation site instead of
-# silently poisoning later replays. Zero production cost (flag unset).
-os.environ.setdefault("LUMA_LH_FREEZE_DOCS", "1")
 
 from luma_etl_data_platform_spark.core.session import get_spark
 from luma_etl_data_platform_spark.sources.tables import TABLES

@@ -103,9 +103,9 @@ def test_nullable_json_leaves_user_metadata_untouched(spark, tmp_path):
 
 
 def test_frozen_docs_trip_on_inplace_mutation(spark, tmp_path):
-    """Round-11: the invariant is MECHANICAL under the suite — with
-    LUMA_LH_FREEZE_DOCS set (conftest), a deliberate in-place
-    mutation of a shared cache element raises at the mutation site."""
+    """The invariant is MECHANICAL: every cached doc is stored frozen,
+    so a deliberate in-place mutation of a shared cache element raises
+    at the mutation site."""
     import pytest
 
     path = str(tmp_path / "t")
@@ -143,9 +143,9 @@ def test_dml_pins_one_listing_per_attempt(spark, tmp_path, monkeypatch):
     calls = {"n": 0}
     real = LH._last_ckpt_anchor
 
-    def counting(fs, jvm, table_path):
+    def counting(io, table_path):
         calls["n"] += 1
-        return real(fs, jvm, table_path)
+        return real(io, table_path)
 
     monkeypatch.setattr(LH, "_last_ckpt_anchor", counting)
     LH.merge_into(spark, path,

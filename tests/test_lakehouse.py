@@ -16,6 +16,7 @@ pytestmark = pytest.mark.slow
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from luma_etl_data_platform_spark.sources import fileio
 from luma_etl_data_platform_spark.sources import lakehouse as LH
 
 
@@ -860,15 +861,13 @@ def test_wap_abort_surfaces_failed_delete(table, spark, monkeypatch):
         spark, table, _mk(spark, [dict(k=52, v=520, tag="y")]), ["k"])
     staged = os.path.join(table, pending["staged_dir"])
     assert os.path.isdir(staged)
-    real_fs, jvm = LH._fs(spark, table)
-
-    class StuckFS:
-        """fs whose recursive delete fails with the target intact."""
-        def delete(self, path, recursive=False):
+    class StuckIO:
+        """seam whose recursive delete fails with the target intact."""
+        def delete(self, path):
             return False
         def exists(self, path):
             return True
-    monkeypatch.setattr(LH, "_fs", lambda sp, p: (StuckFS(), jvm))
+    monkeypatch.setattr(fileio, "file_io", lambda sp, p: StuckIO())
     with pytest.raises(IOError, match="failed to delete"):
         LH.abort_staged(spark, table, pending)
     monkeypatch.undo()
@@ -1921,8 +1920,7 @@ def test_shallow_clone_is_zero_copy_and_reads_identically(table, spark,
     info = LH.clone_table(spark, table, dst)
     assert info == {"version": 1, "n_files": 3, "n_rows": 6}
     # zero data files under the clone root; every source file untouched
-    fs, jvm = LH._fs(spark, dst)
-    assert list(LH._data_files_on_disk(fs, jvm, dst)) == []
+    assert LH._data_files_on_disk(spark, dst) == []
     assert all(os.path.getmtime(f) == m for f, m in mtimes.items())
     assert _rows(LH.read_table(spark, dst)) == _rows(
         LH.read_table(spark, table))
@@ -2126,8 +2124,7 @@ def test_clone_of_clone_chains_absolute_refs(table, spark, tmp_path):
     refs = [a["path"] for a in LH.snapshot_adds(spark, c2)]
     assert sum(1 for r in refs if r.startswith(table)) == 3
     assert all(r.startswith((table, c1)) for r in refs)
-    fs, jvm = LH._fs(spark, c2)
-    assert list(LH._data_files_on_disk(fs, jvm, c2)) == []
+    assert LH._data_files_on_disk(spark, c2) == []
     # divergence at every layer stays isolated
     LH.delete_where(spark, c2, "k = 1")
     assert LH.read_table(spark, c2).count() == 6

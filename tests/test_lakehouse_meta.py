@@ -18,6 +18,7 @@ import pytest
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
+from luma_etl_data_platform_spark.sources import fileio
 from luma_etl_data_platform_spark.sources import lakehouse as LH
 from luma_etl_data_platform_spark.sources import lakehouse_meta as meta
 
@@ -303,13 +304,21 @@ def test_last_checkpoint_pointer_bounds_log_parsing(
     LH.append_table(spark, path, spark.createDataFrame(
         [(9, 9)], ["k", "v"]).coalesce(1))
     reads: list[str] = []
-    orig = LH._read_text
+    real_io = fileio.file_io
 
-    def counting(fs, jvm, p):
-        if p.endswith(".json"):
-            reads.append(p)
-        return orig(fs, jvm, p)
-    monkeypatch.setattr(LH, "_read_text", counting)
+    class CountingIO:
+        def __init__(self, io):
+            self._io = io
+
+        def __getattr__(self, name):
+            return getattr(self._io, name)
+
+        def read_text(self, p):
+            if p.endswith(".json"):
+                reads.append(p)
+            return self._io.read_text(p)
+    monkeypatch.setattr(fileio, "file_io",
+                        lambda sp, p: CountingIO(real_io(sp, p)))
     docs = LH._commits(spark, path)
     assert [d["version"] for d in docs] == [6, 7, 8, 9]
     # checkpoint (+ its resurrected shadowed plain doc) + 3 tail docs

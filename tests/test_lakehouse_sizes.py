@@ -5,8 +5,9 @@ crashed ``_log/.ckptdata-*`` temp dirs, and the partition-probe
 type/timezone guards.
 
 The driver-RPC discipline mirrors ``test_lakehouse_meta``'s
-no-materialization style: a proxy filesystem object counts (or
-forbids) the per-file calls that must no longer happen.
+no-materialization style: a proxy around the filesystem seam
+(``sources/fileio``) counts (or forbids) the per-file calls that must
+no longer happen.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from luma_etl_data_platform_spark.functions.text import portable_hash32_py
+from luma_etl_data_platform_spark.sources import fileio
 from luma_etl_data_platform_spark.sources import lakehouse as LH
 
 
@@ -46,44 +48,46 @@ def table(tmp_path, spark):
 
 
 class _ForbidStatFS:
-    """Proxy fs whose per-file stat/exists probes fail loudly — the
-    zero-probe contract for DESCRIBE on a fully-sized history."""
+    """Proxy seam whose probes of DATA files (a path or listing
+    outside ``_log/``) fail loudly — the zero-probe contract for
+    DESCRIBE on a fully-sized history."""
 
-    def __init__(self, fs, forbid=("getFileStatus",)):
-        self._fs = fs
-        self._forbid = set(forbid)
-        self.calls: dict[str, int] = {}
+    def __init__(self, io):
+        self._io = io
 
     def __getattr__(self, name):
-        if name in self._forbid:
-            raise AssertionError(
-                f"per-file driver probe {name} called — the "
-                "size_bytes lane must make this unnecessary")
-        return getattr(self._fs, name)
+        real = getattr(self._io, name)
+
+        def probe(path, *a):
+            if "/_log" not in path:
+                raise AssertionError(
+                    f"per-file driver probe {name}({path}) called — "
+                    "the size_bytes lane must make this unnecessary")
+            return real(path, *a)
+        return probe
 
 
 class _CountingFS:
-    def __init__(self, fs, count=("exists", "listStatus")):
-        self._fs = fs
+    def __init__(self, io, count=("exists", "list")):
+        self._io = io
         self.calls = {c: 0 for c in count}
 
     def __getattr__(self, name):
         if name in self.calls:
             self.calls[name] += 1
-        return getattr(self._fs, name)
+        return getattr(self._io, name)
 
 
 def _proxy_fs(monkeypatch, cls, **kw):
-    real = LH._fs
+    real = fileio.file_io
     holder = {}
 
     def patched(spark, path):
-        fs, jvm = real(spark, path)
         if "fs" not in holder:
-            holder["fs"] = cls(fs, **kw)
-        return holder["fs"], jvm
+            holder["fs"] = cls(real(spark, path), **kw)
+        return holder["fs"]
 
-    monkeypatch.setattr(LH, "_fs", patched)
+    monkeypatch.setattr(fileio, "file_io", patched)
     return holder
 
 
@@ -194,7 +198,6 @@ def test_restore_missing_file_still_detected(table, spark):
 
 
 def test_existing_files_helper_multi_dir(table, spark, tmp_path):
-    fs, jvm = LH._fs(spark, table)
     other = tmp_path / "elsewhere"
     other.mkdir()
     (other / "x.parquet").write_bytes(b"x")
@@ -203,8 +206,8 @@ def test_existing_files_helper_multi_dir(table, spark, tmp_path):
     probe = (paths + [str(other / "x.parquet"),
                       str(other / "missing.parquet"),
                       str(tmp_path / "no_dir" / "y.parquet")])
-    have = LH._existing_files(fs, jvm, probe)
-    assert have == set(paths) | {str(other / "x.parquet")}
+    have = LH._existing_files(spark, probe)
+    assert have.keys() == set(paths) | {str(other / "x.parquet")}
 
 
 def test_expire_reaps_ckptdata_orphans(table, spark):

@@ -210,26 +210,3 @@ def test_catalog_maintenance_sweep(spark, tmp_path):
     # data intact everywhere
     assert LH.read_table(spark, f"{root}/ns1/t1").count() == 8
     assert LH.read_table(spark, f"{root}/t2").count() == 7
-
-
-def test_local_fast_lanes_gate_on_default_fs(spark, tmp_path):
-    """ADVICE r11 (medium): a SCHEME-LESS path is only driver-local
-    when fs.defaultFS resolves to the local filesystem. Under an
-    hdfs://-style default the local log/placement/footer/ledger lanes
-    must decline scheme-less roots (the Hadoop lane owns them);
-    explicit file: roots stay local either way."""
-    from luma_etl_data_platform_spark.sources import lakehouse as LH
-    conf = spark._jsc.hadoopConfiguration()
-    orig = conf.get("fs.defaultFS", "file:///")
-    p = str(tmp_path / "t")
-    assert LH._local_fs_path(p, spark) == p  # local default claims it
-    try:
-        conf.set("fs.defaultFS", "hdfs://nn:8020")
-        LH._DEFAULT_FS_LOCAL.clear()
-        assert LH._local_fs_path(p, spark) is None
-        assert LH._local_fs_path(f"file:{p}", spark) == p
-        assert LH._local_fs_path("s3a://bucket/t", spark) is None
-    finally:
-        conf.set("fs.defaultFS", orig)
-        LH._DEFAULT_FS_LOCAL.clear()
-    assert LH._local_fs_path(p, spark) == p

@@ -9,9 +9,9 @@ bit-identical to the Spark lanes they shortcut.
   NaN-suppressed, omitted (over 4 KB) or truncated footer stats,
   collated strings and the string columns of files another writer
   produced (`convert_to_table`).
-- ledger driver-side reads (`ChangeFeedLedger._versions_local` in
-  `processed`/`_summary_full`): same (min, watermark, exceptions)
-  triple as the Spark gap-finding join, including the non-contiguous
+- ledger driver-side reads (`ChangeFeedLedger.processed` under
+  `_summary_full`): the (min, watermark, exceptions) triple the former
+  Spark gap-finding join computed, including the non-contiguous
   case.
 """
 
@@ -167,34 +167,30 @@ def test_footer_stats_nan_bails_to_spark_lane(tmpdir_, spark):
     assert adds[0]["stats"]["k"] == {"min": 0, "max": 49}
 
 
-def _ledger_spark_triple(ledger):
-    """The Spark lane's (mn, wm, exc), forced by disabling the local
-    read (simulating a non-local ledger URI)."""
-    orig = ledger._versions_local
-    ledger._versions_local = lambda: None
-    try:
-        return ledger._summary_full()
-    finally:
-        ledger._versions_local = orig
+# (min, watermark, exceptions) per recorded version list: the triples
+# the former Spark gap-finding join returned for the same ledgers
+_LEDGER_TRIPLES = {
+    (): (None, None, set()),
+    (1,): (1, 1, set()),
+    (1, 2, 3, 4): (1, 4, set()),
+    (2, 3, 4): (2, 4, set()),             # starts above 1, contiguous
+    (1, 2, 5, 6, 9): (1, 2, {5, 6, 9}),   # holes above the watermark
+    (7, 9): (7, 7, {9}),                  # immediate hole above mn
+}
 
 
-@pytest.mark.parametrize("versions", [
-    [],
-    [1],
-    [1, 2, 3, 4],
-    [2, 3, 4],            # starts above 1, contiguous
-    [1, 2, 5, 6, 9],      # holes -> watermark 2, exceptions {5,6,9}
-    [7, 9],               # immediate hole above mn
-])
+@pytest.mark.parametrize("versions", [list(k) for k in _LEDGER_TRIPLES])
 def test_ledger_local_summary_matches_spark(spark, tmpdir_, versions):
     path = f"{tmpdir_}/ledger"
     ledger = ChangeFeedLedger(spark, path, compact_every=1000)
     for v in versions:
         ledger.record(v)
-    local = ledger._summary_full()
-    assert ledger._versions_local() == set(versions)
-    assert local == _ledger_spark_triple(ledger)
+    assert ledger._summary_full() == _LEDGER_TRIPLES[tuple(versions)]
     assert ledger.processed() == set(versions)
+    # the files stay readable by Spark's parquet reader
+    if versions:
+        got = {r["version"] for r in spark.read.parquet(path).collect()}
+        assert got == set(versions)
 
 
 def test_ledger_local_skips_hidden_and_tmp_files(spark, tmpdir_):
@@ -205,7 +201,7 @@ def test_ledger_local_skips_hidden_and_tmp_files(spark, tmpdir_):
     # in-flight temp and marker files must be invisible to the lane
     open(f"{path}/.part-xyz.parquet.tmp", "wb").write(b"garbage")
     open(f"{path}/_feed_marker", "w").write("{}")
-    assert ledger._versions_local() == {3, 4}
+    assert ledger.processed() == {3, 4}
     assert ledger.summary() == (4, set())
 
 

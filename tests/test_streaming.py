@@ -379,93 +379,6 @@ def test_stream_changes_max_bytes_per_trigger(spark, tmp_path):
     assert seen == [1, 2, 3, 4, 5, 6]
 
 
-def test_stream_changes_coalesced_drain(spark, tmp_path):
-    """Round-12 optimization: coalesce_versions=True drains each
-    maximal run of consecutive unprocessed versions as ONE net-diff
-    batch. Pins: (a) a keyed latest-state mirror built from the
-    coalesced feed is row-identical to the per-version feed's; (b)
-    the ledger records every coalesced version (full redelivery skips
-    all); (c) max_versions_per_trigger closes the run exactly where
-    the per-version loop would; (d) a crash between apply and record
-    redelivers the unrecorded versions as a new run."""
-    from luma_etl_data_platform_spark.sources import lakehouse as LH
-    from luma_etl_data_platform_spark.streaming.cdf import stream_changes
-    src = str(tmp_path / "src")
-    mk = lambda rows: spark.createDataFrame(rows, ["k", "v"])
-    LH.create_table(spark, src, mk([(1, 10), (2, 20)]).coalesce(1), ["k"])
-    LH.merge_into(spark, src, mk([(2, 25), (3, 30)]), ["k"])
-    LH.delete_where(spark, src, "k = 1")
-    LH.append_table(spark, src, mk([(4, 40)]).coalesce(1))
-
-    def mirror_apply(path):
-        def _apply(changes, version):
-            ups = (changes.filter(F.col("_change_type")
-                                  .isin("insert", "update_postimage"))
-                   .drop("_change_type"))
-            dels = (changes.filter(F.col("_change_type") == "delete")
-                    .drop("_change_type"))
-            if LH.current_version(spark, path) == 0:
-                LH.create_table(spark, path, ups.coalesce(1), ["k"])
-            else:
-                LH.merge_into(spark, path, ups, ["k"])
-            if dels.limit(1).count():
-                LH.merge_into(spark, path, dels, ["k"], update_set=None,
-                              delete_condition=F.lit(True),
-                              insert_when_not_matched=False)
-        return _apply
-
-    # (a)+(b): coalesced result == per-version result, ledger complete
-    m1, m2 = str(tmp_path / "m1"), str(tmp_path / "m2")
-    batches: list[int] = []
-    per = stream_changes(spark, src, mirror_apply(m1),
-                         str(tmp_path / "led1"))
-    coal = stream_changes(
-        spark, src,
-        lambda c, v: (batches.append(v), mirror_apply(m2)(c, v)),
-        str(tmp_path / "led2"), coalesce_versions=True)
-    assert per["versions_applied"] == [1, 2, 3, 4]
-    assert coal["versions_applied"] == [1, 2, 3, 4]
-    assert batches == [4]  # one net-diff batch for the whole run
-    rows1 = sorted(tuple(r) for r in LH.read_table(spark, m1).collect())
-    rows2 = sorted(tuple(r) for r in LH.read_table(spark, m2).collect())
-    assert rows1 == rows2 == [(2, 25), (3, 30), (4, 40)]
-    again = stream_changes(spark, src, mirror_apply(m2),
-                           str(tmp_path / "led2"), coalesce_versions=True)
-    assert again["versions_applied"] == [] and again["versions_skipped"] == 4
-
-    # (c): the cap closes the run at 2 versions per trigger
-    seen: list[int] = []
-    led3 = str(tmp_path / "led3")
-    t1 = stream_changes(spark, src, lambda c, v: seen.append(v), led3,
-                        max_versions_per_trigger=2,
-                        coalesce_versions=True)
-    t2 = stream_changes(spark, src, lambda c, v: seen.append(v), led3,
-                        max_versions_per_trigger=2,
-                        coalesce_versions=True)
-    assert t1["versions_applied"] == [1, 2]
-    assert t2["versions_applied"] == [3, 4]
-    assert seen == [2, 4]  # one apply per capped run, batch id = max
-
-    # (d): crash between apply and record — whole run redelivers
-    led4 = str(tmp_path / "led4")
-    calls: list[int] = []
-    boom = [True]
-
-    def crashing(changes, version):
-        calls.append(version)
-        if boom[0]:
-            boom[0] = False
-            raise RuntimeError("crash before record")
-
-    with pytest.raises(RuntimeError):
-        stream_changes(spark, src, crashing, led4,
-                       coalesce_versions=True)
-    out = stream_changes(spark, src, crashing, led4,
-                         coalesce_versions=True)
-    assert out["versions_applied"] == [1, 2, 3, 4]
-    assert calls == [4, 4]  # nothing recorded -> same run redelivered
-
-
 def test_change_feed_ledger_self_compacts(spark, tmp_path):
     """Verdict r7 #3: the ledger's file count is bounded by
     compact_every, not feed lifetime — a 50-record drain must not

@@ -263,6 +263,18 @@ def test_pq_topk_order_and_tiebreak(spark):
     assert all(0 <= int(c) < 4 for r in top for c in r["codes"].split("-"))
 
 
+def test_pq_topk_empty_query_returns_no_rows(spark):
+    """An empty query frame has no distance to rank by: the result is
+    empty, never k arbitrary rows at adc_dist 0 (seeded and trained
+    codebooks alike)."""
+    from luma_etl_data_platform_spark.operators import pq as PQ
+    df = _pq_corpus(spark)
+    query = df.filter(F.col("vec_id") < 0)
+    for book in ("seeded", "trained"):
+        assert PQ.pq_topk(df, query, k=5, dim=8, m_sub=2, k_codes=4,
+                          codebook=book).collect() == []
+
+
 # ----------------------------------------------------------------- MMR
 
 
