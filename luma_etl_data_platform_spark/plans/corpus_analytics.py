@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 from pyspark.sql.window import Window as W
 
 from ..operators import ranking as R
@@ -206,15 +207,24 @@ def _scale_ntile(t: DataFrame, value_col: str, asc: bool,
     by bucket cumulates the distinct values within each bucket — the
     per-value offset is the sum of the two, bit-identical to the old
     single-phase prefix sum because the bucket map is monotone in the
-    ranking direction.
+    ranking direction. NaN sorts after every number (Spark's float
+    ordering), so it gets the top bucket: ``floor(NaN)`` is 0 and
+    would rank NaN among the [0, 1) scores. A non-numeric
+    ``value_col`` is refused — its cast to double would merge real
+    values into the NULL bucket.
     """
+    if not isinstance(t.schema[value_col].dataType, NumericType):
+        raise ValueError(
+            f"_scale_ntile: {value_col!r} is "
+            f"{t.schema[value_col].dataType.simpleString()}, not numeric")
     v = F.col(value_col)
     order = v.asc_nulls_last() if asc else v.desc_nulls_last()
 
     def _bucket(col):
         # order-preserving coarse key; NULLs isolated in their own
         # bucket (the window below orders it last explicitly)
-        return F.floor(col.cast("double"))
+        d = col.cast("double")
+        return F.when(F.isnan(d), F.lit(2**63 - 1)).otherwise(F.floor(d))
 
     cnts = (t.groupBy(value_col).agg(F.count(F.lit(1)).alias("_m"))
             .withColumn("_bk", _bucket(v)))

@@ -721,15 +721,6 @@ FROM clean
 # events minus the deleted keys — predicted by one SQL statement.
 # ---------------------------------------------------------------------------
 def stream_cdf_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Phase timings (round-11, verdict watch #3: the gate's bench
-    # variance was not attributable): LUMA_PHASE_TIMINGS=1 prints ONE
-    # stderr JSON line {"gate", "build", "commits", "first_apply",
-    # "audit"} in seconds, so a future bench delta names its phase.
-    # Off by default; never touches the result row (oracle-stable).
-    import os as _os
-    import sys as _sys
-    import time as _time
-    _marks: list[tuple[str, float]] = [("t0", _time.monotonic())]
     from ..sources import lakehouse as LH
     from ..streaming.cdf import stream_changes
     tmp = tempfile.mkdtemp(prefix="luma_stream_cdf_")
@@ -758,7 +749,6 @@ def stream_cdf_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .filter(F.col("_rn") == 1).drop("_rn")
                         .repartition(8)
                         .localCheckpoint(eager=True))
-    _marks.append(("build", _time.monotonic()))
     LH.create_table(spark, src_path,
                     latest_by_parity.filter(F.col("event_id") % 2 == 0),
                     ["user_id"])
@@ -766,7 +756,6 @@ def stream_cdf_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                   latest_by_parity.filter(F.col("event_id") % 2 == 1),
                   ["user_id"], update_set=upd)
     LH.delete_where(spark, src_path, "user_id % 7 = 0")
-    _marks.append(("commits", _time.monotonic()))
 
     def _apply(changes: DataFrame, version: int) -> None:
         # one pass over the batch's file diff: read_changes is a lazy
@@ -803,7 +792,6 @@ def stream_cdf_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     first = stream_changes(spark, src_path, _apply, ledger,
                            coalesce_versions=True)
     n_rows = LH.read_table(spark, mirror_path).count()
-    _marks.append(("first_apply", _time.monotonic()))
     # full redelivery: every version skips, the mirror is untouched
     second = stream_changes(spark, src_path, _apply, ledger,
                             coalesce_versions=True)
@@ -820,13 +808,6 @@ def stream_cdf_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
              .orderBy("user_id")
              .localCheckpoint(eager=True))
     shutil.rmtree(tmp, ignore_errors=True)
-    if _os.environ.get("LUMA_PHASE_TIMINGS"):
-        _marks.append(("audit", _time.monotonic()))
-        import json as _json
-        phases = {name: round(t - _marks[i][1], 3)
-                  for i, (name, t) in enumerate(_marks[1:])}
-        print(_json.dumps({"gate": "stream_cdf_apply", **phases}),
-              file=_sys.stderr)
     return final
 
 

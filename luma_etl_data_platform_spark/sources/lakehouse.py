@@ -69,9 +69,11 @@ import os
 import re as _re
 import time
 import uuid
+from typing import NamedTuple
 from urllib.parse import unquote
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import (Column, DataFrame, DataFrameReader, Observation,
+                         SparkSession)
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -166,6 +168,22 @@ def _write_commit(spark: SparkSession, table_path: str, version: int,
     pin = _PINNED_COMMITS.get(table_path.rstrip("/"))
     if pin is not None:
         pin[1] = None
+
+
+def _commit_retry(tries: int, attempt, exhausted: str | None = None):
+    """The optimistic-concurrency loop of every committing op: run
+    ``attempt(i)`` for ``i = 0, 1, ...`` until one returns without a
+    :class:`CommitConflictError`. Each attempt re-derives its snapshot
+    from a fresh listing (a CAS loser must never replay a stale one).
+    After ``tries`` losses the last conflict propagates — or, with
+    ``exhausted``, a new conflict carrying that message."""
+    for i in range(tries):
+        try:
+            return attempt(i)
+        except CommitConflictError:
+            if i == tries - 1 and exhausted is None:
+                raise
+    raise CommitConflictError(exhausted)
 
 
 # final transaction outcomes are immutable once decided — cache them
@@ -373,9 +391,9 @@ def _scoped(fn):
     ...)`` in a :class:`_read_scope`. Never apply to an op with an
     internal commit-retry loop: a CAS loser must re-derive from a
     FRESH listing per attempt (an op-wide pin would replay the stale
-    snapshot forever) — those ops pin per attempt instead, exactly
-    as ``_dml_once`` / ``_merge_once`` do."""
-    import functools
+    snapshot forever) — those ops pin per attempt instead: every DML
+    body is a :func:`_pinned_attempt` run by :func:`_commit_retry`
+    and reads its snapshot through :func:`_dml_snapshot`."""
 
     @functools.wraps(fn)
     def wrapper(spark, table_path, *a, **k):
@@ -996,15 +1014,33 @@ def _dv_frame(spark: SparkSession, root: str, rels: list[str]) -> DataFrame:
                     F.col("pos").alias("__dv_i")))
 
 
-def _dv_tag(df: DataFrame) -> DataFrame:
+def _dv_tag(df: DataFrame, with_path: bool = False) -> DataFrame:
     """Prefix a raw file scan with its (basename, row_index) identity
-    — the join key a deletion vector marks rows by. Must be selected
+    — the join key a deletion vector marks rows by — and, with
+    ``with_path``, the full file path as ``_f``. Must be selected
     straight off the scan, before any projection rewrites."""
+    path = F.col("_metadata.file_path")
     return df.select(
-        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-        .alias("__f"),
+        *([path.alias("_f")] if with_path else []),
+        F.element_at(F.split(path, "/"), -1).alias("__f"),
         F.col("_metadata.row_index").alias("__i"),
         "*")
+
+
+def _dv_join(tagged: DataFrame, dv: DataFrame, how: str) -> DataFrame:
+    """Join a tagged scan to deletion-vector rows on (file basename,
+    row position)."""
+    return tagged.join(dv, (tagged["__f"] == dv["__dv_f"])
+                       & (tagged["__i"] == dv["__dv_i"]), how)
+
+
+def _dv_scan(df_raw: DataFrame, dv: DataFrame | None,
+             with_path: bool = False) -> DataFrame:
+    """A raw file scan tagged by :func:`_dv_tag`, minus the rows the
+    deletion-vector overlay ``dv`` deletes (already-deleted rows must
+    neither match a DML predicate nor survive a rewrite)."""
+    tagged = _dv_tag(df_raw, with_path)
+    return tagged if dv is None else _dv_join(tagged, dv, "left_anti")
 
 
 def _apply_dv(df_raw: DataFrame, dv: DataFrame | None) -> DataFrame:
@@ -1013,10 +1049,7 @@ def _apply_dv(df_raw: DataFrame, dv: DataFrame | None) -> DataFrame:
     the scan untouched — zero plan change for DV-free tables."""
     if dv is None:
         return df_raw
-    tagged = _dv_tag(df_raw)
-    out = tagged.join(dv, (tagged["__f"] == dv["__dv_f"])
-                      & (tagged["__i"] == dv["__dv_i"]), "left_anti")
-    return out.drop("__f", "__i")
+    return _dv_scan(df_raw, dv).drop("__f", "__i")
 
 
 def rename_column(spark: SparkSession, table_path: str,
@@ -2060,6 +2093,25 @@ def _table_partition_cols(spark: SparkSession, table_path: str) -> list[str]:
     return []
 
 
+def _write_table_files(spark: SparkSession, table_path: str,
+                       df: DataFrame, keys: list[str] | None = None,
+                       extra_stat_cols: list[str] | tuple = (),
+                       subdir: str | None = None) -> list[dict]:
+    """:func:`_write_data_files` under the table's DECLARED layout:
+    per-file stats for ``keys`` (default: the declared keys) and the
+    declared stat columns, after any ``extra_stat_cols`` (OPTIMIZE's
+    sort/z-order dims); the declared Bloom filters; the declared
+    partition spec. ``subdir`` lands the files in a WAP stage."""
+    return _write_data_files(
+        spark, table_path, df,
+        _table_keys(spark, table_path) if keys is None else keys,
+        stat_cols=list(dict.fromkeys(
+            [*extra_stat_cols, *_table_stat_cols(spark, table_path)])),
+        subdir=subdir,
+        bloom_cols=_table_bloom_cols(spark, table_path),
+        partition_cols=_table_partition_cols(spark, table_path))
+
+
 def set_partition_spec(spark: SparkSession, table_path: str,
                        partition_by: list[str]) -> int:
     """``ALTER TABLE ... SET PARTITION SPEC`` — Iceberg-style
@@ -2078,7 +2130,8 @@ def set_partition_spec(spark: SparkSession, table_path: str,
     Iceberg spec §Partition Evolution. Returns the committed
     version."""
     specs = _partition_specs(partition_by)
-    for _ in range(3):
+
+    def _attempt(_):
         v = current_version(spark, table_path)
         # source-column validation INSIDE the retry loop: a column
         # dropped concurrently steals our CAS version, and the retry
@@ -2092,15 +2145,13 @@ def set_partition_spec(spark: SparkSession, table_path: str,
             raise ValueError(
                 f"set_partition_spec: source column(s) {missing} are "
                 "not in the table schema")
-        try:
-            _write_commit(spark, table_path, v + 1,
-                          {"version": v + 1, "op": "set_partition_spec",
-                           "partition_by": list(partition_by),
-                           "add": [], "remove": []})
-            return v + 1
-        except CommitConflictError:
-            continue
-    raise CommitConflictError(
+        _write_commit(spark, table_path, v + 1,
+                      {"version": v + 1, "op": "set_partition_spec",
+                       "partition_by": list(partition_by),
+                       "add": [], "remove": []})
+        return v + 1
+    return _commit_retry(
+        3, _attempt,
         f"set_partition_spec: lost the commit race on {table_path}")
 
 
@@ -2264,6 +2315,7 @@ def _evolved_schema_json(spark: SparkSession, table_path: str,
         cur.fields + [new_schema[c] for c in new_cols]))
 
 
+@_pinned_attempt  # one listing for the declaration set
 def append_table(spark: SparkSession, table_path: str,
                  df: DataFrame, keys: list[str] | None = None) -> None:
     """Blind append (no key reconciliation): new files, no removes.
@@ -2275,31 +2327,20 @@ def append_table(spark: SparkSession, table_path: str,
     DECLARED keys, so appended files always carry the per-file stats
     the data-skipping paths prune on (blooms and partition layout
     already inherit the declaration)."""
-    _pin_snapshot(table_path)  # one listing for the declaration set
-    try:
-        v = current_version(spark, table_path)
-        if v == 0:
-            raise FileNotFoundError(f"{table_path} has no commit log")
-        _guard_retired_names(spark, table_path, df.columns,
-                             f"append_table on {table_path}")
-        _enforce_constraints(df, table_constraints(spark, table_path),
-                             f"append_table on {table_path}")
-        if keys is None:
-            keys = _table_keys(spark, table_path)
-        evolved = _evolved_schema_json(spark, table_path, df.schema,
-                                       f"append_table on {table_path}")
-        adds = _write_data_files(
-            spark, table_path, df, keys or [],
-            stat_cols=_table_stat_cols(spark, table_path),
-            bloom_cols=_table_bloom_cols(spark, table_path),
-            partition_cols=_table_partition_cols(spark, table_path))
-        doc = {"version": v + 1, "op": "append",
-               "add": adds, "remove": []}
-        if evolved is not None:
-            doc["schema"] = evolved
-        _write_commit(spark, table_path, v + 1, doc)
-    finally:
-        _unpin_snapshot(table_path)
+    v = current_version(spark, table_path)
+    if v == 0:
+        raise FileNotFoundError(f"{table_path} has no commit log")
+    _guard_retired_names(spark, table_path, df.columns,
+                         f"append_table on {table_path}")
+    _enforce_constraints(df, table_constraints(spark, table_path),
+                         f"append_table on {table_path}")
+    evolved = _evolved_schema_json(spark, table_path, df.schema,
+                                   f"append_table on {table_path}")
+    adds = _write_table_files(spark, table_path, df, keys)
+    doc = {"version": v + 1, "op": "append", "add": adds, "remove": []}
+    if evolved is not None:
+        doc["schema"] = evolved
+    _write_commit(spark, table_path, v + 1, doc)
 
 
 def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
@@ -2361,38 +2402,30 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
     ``append_table``."""
     if mode not in ("cow", "mor"):
         raise ValueError(f"merge_into: unknown mode {mode!r}")
-    for attempt in range(max_retries + 1):
-        try:
-            if mode == "mor":
-                return _merge_mor_once(spark, table_path, source, keys,
-                                       update_set, delete_condition,
-                                       insert_when_not_matched,
-                                       schema_evolution)
-            return _merge_once(spark, table_path, source, keys,
-                               update_set, delete_condition,
-                               insert_when_not_matched, schema_evolution)
-        except CommitConflictError:
-            if attempt == max_retries:
-                raise
-    raise AssertionError("unreachable")
+    once = _merge_mor_once if mode == "mor" else _merge_once
+    return _commit_retry(max_retries + 1, lambda _: once(
+        spark, table_path, source, keys, update_set, delete_condition,
+        insert_when_not_matched, schema_evolution))
 
 
 def _evolve_merge_target(spark: SparkSession, table_path: str,
-                         target: DataFrame, source: DataFrame) -> DataFrame:
+                         target: DataFrame, source: DataFrame) -> tuple:
     """MERGE schema evolution: widen the logical target with the
-    source's NEW columns (typed NULL for existing rows). Retired
-    names (DROP/RENAME COLUMN history) are refused — silently
-    resurrecting a dropped column under its old name would un-drop
-    stale data on old files."""
+    source's NEW columns (typed NULL for existing rows); returns
+    ``(target, schema)`` with the widened ``schema`` field the commit
+    restates (see :func:`_evolved_schema_json`). Retired names
+    (DROP/RENAME COLUMN history) are refused — silently resurrecting
+    a dropped column under its old name would un-drop stale data on
+    old files."""
+    context = f"merge_into schema evolution on {table_path}"
     new_cols = [c for c in source.columns if c not in target.columns]
-    if not new_cols:
-        return target
-    _guard_retired_names(spark, table_path, new_cols,
-                         f"merge_into schema evolution on {table_path}")
+    if new_cols:
+        _guard_retired_names(spark, table_path, new_cols, context)
     for c in new_cols:
         target = target.withColumn(
             c, F.lit(None).cast(source.schema[c].dataType))
-    return target
+    return target, _evolved_schema_json(spark, table_path, source.schema,
+                                        context)
 
 
 def _table_keys(spark: SparkSession, table_path: str) -> list[str]:
@@ -2436,8 +2469,83 @@ def _recon_candidates(spark: SparkSession, table_path: str,
                                   version=base_version, eq=eq or None)
 
 
+class _Snap(NamedTuple):
+    """One DML attempt's snapshot, every field read at ``version`` —
+    the version its commit-CAS guards."""
+    version: int
+    root: str
+    files: list[str]
+    events: list[dict]
+    dv: DataFrame | None
+    schema: StructType | None
+    reader: DataFrameReader
+
+
+def _dml_snapshot(spark: SparkSession, table_path: str) -> _Snap:
+    """The pinned snapshot prologue shared by every DML body (run it
+    inside a :func:`_pinned_attempt`, so the derivations share one
+    listing): live files, RENAME/DROP events, the deletion-vector
+    overlay, the declared schema and the scan reader for them."""
+    version = current_version(spark, table_path)
+    if version == 0:
+        raise FileNotFoundError(f"{table_path} has no commit log")
+    files = snapshot_files(spark, table_path, version)
+    events = _schema_events(spark, table_path, version)
+    dv = _dv_overlay(spark, table_path, version)
+    schema = table_schema(spark, table_path, version)
+    return _Snap(version, table_path.rstrip("/"), files, events, dv,
+                 schema, _file_reader(spark, schema, events))
+
+
+def _set_columns(cols: list[str], update_set: dict | str,
+                 keys: list[str] | tuple = (), when: Column | None = None,
+                 qualified: bool = False) -> list[Column]:
+    """The post-image projection of a SET clause over ``cols``:
+    ``"all"`` takes every column from the source, a dict maps column
+    → Column or SQL string, and keys plus unnamed columns keep the
+    target's value. ``qualified`` reads the MERGE join's
+    ``tgt``/``src`` sides; ``when`` (the caller's matched/condition
+    guard) keeps the target's value on rows it rejects. Every RHS
+    evaluates against the PRE-update row (one select, no chained
+    withColumn — standard UPDATE semantics even when a set column
+    also appears in the condition or another RHS)."""
+    out = []
+    for c in cols:
+        old = F.col(f"tgt.{c}" if qualified else c)
+        is_set = update_set == "all" or (isinstance(update_set, dict)
+                                         and c in update_set)
+        if c in keys or not is_set:
+            out.append(old.alias(c) if qualified else old)
+            continue
+        new = F.col(f"src.{c}") if update_set == "all" else update_set[c]
+        if isinstance(new, str):
+            new = F.expr(new)
+        if when is not None:
+            new = F.when(when, new).otherwise(old)
+        out.append(new.alias(c))
+    return out
+
+
+def _match_source(tgt: DataFrame, src: DataFrame, keys: list[str],
+                  delete_condition) -> tuple:
+    """MERGE's target ⋈ broadcast source join: ``(joined, is_matched,
+    drop)``. The matched marker is a non-null sentinel column, NOT
+    "any source column non-null" — which would misclassify under
+    nullable source data; ``drop`` is the WHEN MATCHED AND
+    ``delete_condition`` THEN DELETE clause."""
+    joined = tgt.alias("tgt").join(
+        F.broadcast(src.withColumn("__hit", F.lit(1)).alias("src")),
+        keys, "left")
+    is_matched = F.col("src.__hit").isNotNull()
+    if isinstance(delete_condition, str):
+        delete_condition = F.expr(delete_condition)
+    drop = (is_matched & delete_condition) if delete_condition is not None \
+        else F.lit(False)
+    return joined, is_matched, drop
+
+
 @_pinned_attempt
-def _dml_once(spark: SparkSession, table_path: str, condition,
+def _dml_once(spark: SparkSession, table_path: str, cond: Column,
               update_set: dict[str, Column] | None, op: str,
               insert_df: DataFrame | None = None,
               recon_spec: tuple | None = None) -> dict:
@@ -2455,20 +2563,11 @@ def _dml_once(spark: SparkSession, table_path: str, condition,
     candidate derivation and the version check (ADVICE r8: the
     TOCTOU that could silently skip rows in concurrently-added files
     or resurrect rows from files a concurrent OPTIMIZE removed)."""
-    base_version = current_version(spark, table_path)
-    if base_version == 0:
-        raise FileNotFoundError(f"{table_path} has no commit log")
-    root = table_path.rstrip("/")
-    files = snapshot_files(spark, table_path, base_version)
-    events = _schema_events(spark, table_path, base_version)
-    dv = _dv_overlay(spark, table_path, base_version)
-    schema = table_schema(spark, table_path, base_version)
-    reader = _file_reader(spark, schema, events)
+    s = _dml_snapshot(spark, table_path)
     recon_files = _recon_candidates(spark, table_path, recon_spec,
-                                    base_version)
-    raw = reader.parquet(*files)
-    target = _finish_logical(_apply_dv(raw, dv), schema, events)
-    cond = F.expr(condition) if isinstance(condition, str) else condition
+                                    s.version)
+    raw = s.reader.parquet(*s.files)
+    target = _finish_logical(_apply_dv(raw, s.dv), s.schema, s.events)
 
     # reconnaissance scan: all files, or only the stat-surviving
     # candidates when the caller's predicate came in structured form
@@ -2476,7 +2575,7 @@ def _dml_once(spark: SparkSession, table_path: str, condition,
     if recon_files is None:
         recon_src = raw
     elif recon_files:
-        recon_src = reader.parquet(*[_abs(root, p) for p in recon_files])
+        recon_src = s.reader.parquet(*[_abs(s.root, p) for p in recon_files])
     else:
         recon_src = None  # every file stat-pruned: nothing matches
     touched: list[str] = []
@@ -2485,59 +2584,35 @@ def _dml_once(spark: SparkSession, table_path: str, condition,
         # events (or the DV anti-join's projection) rewrite the plan;
         # DV-deleted rows must neither mark files touched nor survive
         # a rewrite
-        tagged = recon_src.select(
-            F.col("_metadata.file_path").alias("_f"),
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-            .alias("__f"),
-            F.col("_metadata.row_index").alias("__i"), "*")
-        if dv is not None:
-            tagged = tagged.join(
-                dv, (tagged["__f"] == dv["__dv_f"])
-                & (tagged["__i"] == dv["__dv_i"]), "left_anti")
+        tagged = _dv_scan(recon_src, s.dv, with_path=True)
         # a candidate SUBSET may predate a schema evolution and lack a
         # predicate column entirely — pad with typed NULLs (keeping
         # the _f tag, so no _align_logical select) before filtering
         probe = _pad_logical(
-            _apply_schema_events(tagged.drop("__f", "__i"), events),
+            _apply_schema_events(tagged.drop("__f", "__i"), s.events),
             target.schema)
         touched_rows = (probe
                         .filter(cond)
                         .select("_f")
                         .distinct().collect())
         touched = sorted(r["_f"] for r in touched_rows)
-    touched_rel = [_log_ref(f, root) for f in touched]
+    touched_rel = [_log_ref(f, s.root) for f in touched]
     if not touched and insert_df is None:
-        return {"version": base_version, "n_files_rewritten": 0,
-                "n_files_carried": len(files), "n_rows_changed": 0}
+        return {"version": s.version, "n_files_rewritten": 0,
+                "n_files_carried": len(s.files), "n_rows_changed": 0}
 
     n_match = 0
     out: DataFrame | None = None
     if touched:
         tgt_touched = _align_logical(
             _apply_schema_events(
-                _apply_dv(reader.parquet(*touched), dv),
-                events),
+                _apply_dv(s.reader.parquet(*touched), s.dv),
+                s.events),
             target.schema)
         n_match = tgt_touched.filter(cond).count()
-    if not touched:
-        pass
-    elif update_set is None:
-        out = tgt_touched.filter(~cond)
-    else:
-        # every RHS evaluates against the PRE-update row (one select,
-        # no chained withColumn — standard UPDATE semantics even when
-        # a set column also appears in the condition or another RHS)
-        out_cols = []
-        for c in target.columns:
-            if c in update_set:
-                expr = update_set[c]
-                if isinstance(expr, str):
-                    expr = F.expr(expr)
-                out_cols.append(F.when(cond, expr)
-                                .otherwise(F.col(c)).alias(c))
-            else:
-                out_cols.append(F.col(c))
-        out = tgt_touched.select(*out_cols)
+        out = (tgt_touched.filter(~cond) if update_set is None else
+               tgt_touched.select(*_set_columns(target.columns, update_set,
+                                                when=cond)))
 
     adds: list[dict] = []
     if out is not None and (update_set is not None
@@ -2547,39 +2622,103 @@ def _dml_once(spark: SparkSession, table_path: str, condition,
             # subset of already-valid rows and need no re-check
             _enforce_constraints(out, table_constraints(spark, table_path),
                                  f"update_where on {table_path}")
-        adds = _write_data_files(spark, table_path, out,
-                                 _table_keys(spark, table_path),
-                                 stat_cols=_table_stat_cols(
-                                     spark, table_path),
-                                 bloom_cols=_table_bloom_cols(
-                                     spark, table_path),
-                                 partition_cols=_table_partition_cols(
-                                     spark, table_path))
+        adds = _write_table_files(spark, table_path, out)
     n_inserted = 0
     if insert_df is not None:
         ins = _align_logical(insert_df, target.schema)
         _enforce_constraints(ins, table_constraints(spark, table_path),
                              f"{op} on {table_path}")
-        ins_adds = _write_data_files(spark, table_path, ins,
-                                     _table_keys(spark, table_path),
-                                     stat_cols=_table_stat_cols(
-                                         spark, table_path),
-                                     bloom_cols=_table_bloom_cols(
-                                         spark, table_path),
-                                     partition_cols=_table_partition_cols(
-                                         spark, table_path))
+        ins_adds = _write_table_files(spark, table_path, ins)
         n_inserted = sum(a.get("rows") or 0 for a in ins_adds)
         adds += ins_adds
-    doc = {"version": base_version + 1, "op": op,
+    doc = {"version": s.version + 1, "op": op,
            "add": adds, "remove": touched_rel}
-    _write_commit(spark, table_path, base_version + 1, doc)
-    res = {"version": base_version + 1,
+    _write_commit(spark, table_path, s.version + 1, doc)
+    res = {"version": s.version + 1,
            "n_files_rewritten": len(touched_rel),
-           "n_files_carried": len(files) - len(touched_rel),
+           "n_files_carried": len(s.files) - len(touched_rel),
            "n_rows_changed": n_match}
     if insert_df is not None:
         res["n_rows_inserted"] = n_inserted
     return res
+
+
+@_pinned_attempt
+def _dml_mor_once(spark: SparkSession, table_path: str, cond: Column,
+                  update_set: dict | None,
+                  recon_spec: tuple | None = None) -> dict:
+    """Shared merge-on-read body of DELETE WHERE / UPDATE WHERE: the
+    matched rows' (file, row_index) positions become one
+    deletion-vector sidecar and NO data file is rewritten; an
+    ``update_set`` additionally lands the matched rows' post-images
+    as new small files in the SAME commit."""
+    s = _dml_snapshot(spark, table_path)
+    n_key = "n_rows_deleted" if update_set is None else "n_rows_updated"
+    noop = {"version": s.version, n_key: 0, "dv_file": None}
+    files = s.files
+    # structured predicate: the matched-row scan opens only the
+    # stat/partition/Bloom-surviving files (pinned at s.version —
+    # same TOCTOU-free contract as _dml_once); a Bloom-pruned MOR
+    # point delete (GDPR erasure) opens O(matches) files
+    cands = _recon_candidates(spark, table_path, recon_spec, s.version)
+    if cands is not None and s.schema is not None:
+        # (legacy logs without a declared schema skip the file-level
+        # prune: a candidate SUBSET could lack a predicate column and
+        # there is no declared type to pad it back with)
+        if not cands:
+            return noop
+        files = [_abs(s.root, p) for p in cands]
+    # already-deleted rows must not be re-recorded; a candidate/event
+    # subset may predate an evolution — pad the missing logical
+    # columns (keeping the __f/__i tags)
+    probe = _pad_logical(
+        _apply_schema_events(_dv_scan(s.reader.parquet(*files), s.dv),
+                             s.events), s.schema)
+    positions = (F.col("__f").alias("f"), F.col("__i").alias("pos"))
+    matched = probe.filter(cond)
+    if update_set is None:
+        matched = matched.select(*positions)
+    matched = matched.localCheckpoint(eager=True)
+    n = matched.count()
+    if n == 0:
+        return noop
+    adds: list[dict] = []
+    if update_set is not None:
+        updated = matched.select(*_set_columns(
+            [c for c in matched.columns if c not in ("__f", "__i")],
+            update_set))
+        _enforce_constraints(updated, table_constraints(spark, table_path),
+                             f"update_where(mor) on {table_path}")
+        adds = _write_table_files(spark, table_path, updated)
+        matched = matched.select(*positions)
+    rel = _write_dv_sidecar(spark, table_path, matched)
+    _commit_with_sidecar(spark, table_path, {
+        "version": s.version + 1,
+        "op": "delete_mor" if update_set is None else "update_mor",
+        "add": adds, "remove": [], "dv_add": rel, "dv_rows": n})
+    res = {"version": s.version + 1, n_key: n, "dv_file": rel}
+    if update_set is not None:
+        res["n_files_added"] = len(adds)
+    return res
+
+
+def _where_dml(spark: SparkSession, table_path: str, condition,
+               update_set: dict | None, max_retries: int,
+               mode: str) -> dict:
+    """DELETE WHERE (``update_set=None``) / UPDATE WHERE: one
+    retry loop around the copy-on-write or merge-on-read body."""
+    op = "delete" if update_set is None else "update"
+    if mode not in ("cow", "mor"):
+        raise ValueError(f"{op}_where: unknown mode {mode!r}")
+
+    def _attempt(_):
+        cond, spec = _structured_condition(spark, table_path, condition)
+        if mode == "mor":
+            return _dml_mor_once(spark, table_path, cond, update_set,
+                                 recon_spec=spec)
+        return _dml_once(spark, table_path, cond, update_set, op,
+                         recon_spec=spec)
+    return _commit_retry(max_retries + 1, _attempt)
 
 
 def delete_where(spark: SparkSession, table_path: str,
@@ -2612,79 +2751,11 @@ def delete_where(spark: SparkSession, table_path: str,
     sparse deletes on huge files — a 10-row GDPR erasure against a
     1 GB file costs a few KB of sidecar instead of a 1 GB rewrite —
     at the price of one anti-join per read until the next OPTIMIZE."""
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"delete_where: unknown mode {mode!r}")
-    for attempt in range(max_retries + 1):
-        try:
-            cond, spec = _structured_condition(spark, table_path,
-                                               condition)
-            if mode == "mor":
-                return _delete_mor_once(spark, table_path, cond,
-                                        recon_spec=spec)
-            return _dml_once(spark, table_path, cond, None, "delete",
-                             recon_spec=spec)
-        except CommitConflictError:
-            if attempt == max_retries:
-                raise
-    raise AssertionError("unreachable")
+    return _where_dml(spark, table_path, condition, None, max_retries,
+                      mode)
 
 
-def _delete_mor_once(spark: SparkSession, table_path: str,
-                     condition, recon_spec: tuple | None = None) -> dict:
-    base_version = current_version(spark, table_path)
-    if base_version == 0:
-        raise FileNotFoundError(f"{table_path} has no commit log")
-    root = table_path.rstrip("/")
-    files = snapshot_files(spark, table_path, base_version)
-    events = _schema_events(spark, table_path, base_version)
-    dv = _dv_overlay(spark, table_path, base_version)
-    schema = table_schema(spark, table_path, base_version)
-    # structured predicate: the matched-row scan opens only the
-    # stat/partition/Bloom-surviving files (pinned at base_version —
-    # same TOCTOU-free contract as _dml_once); a Bloom-pruned MOR
-    # point delete (GDPR erasure) opens O(matches) files
-    cands = _recon_candidates(spark, table_path, recon_spec,
-                              base_version)
-    if cands is not None and schema is not None:
-        # (legacy logs without a declared schema skip the file-level
-        # prune: a candidate SUBSET could lack a predicate column and
-        # there is no declared type to pad it back with)
-        if not cands:
-            return {"version": base_version, "n_rows_deleted": 0,
-                    "dv_file": None}
-        files = [_abs(root, p) for p in cands]
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    tagged = _dv_tag(_file_reader(spark, schema, events)
-                     .parquet(*files))
-    if dv is not None:
-        # already-deleted rows must not be re-recorded
-        tagged = tagged.join(
-            dv, (tagged["__f"] == dv["__dv_f"])
-            & (tagged["__i"] == dv["__dv_i"]), "left_anti")
-    # a candidate/event subset may predate an evolution — pad the
-    # missing logical columns (keeping the __f/__i tags)
-    probe = _pad_logical(_apply_schema_events(tagged, events), schema)
-    hits = (probe
-            .filter(cond)
-            .select(F.col("__f").alias("f"), F.col("__i").alias("pos"))
-            .localCheckpoint(eager=True))
-    n = hits.count()
-    if n == 0:
-        return {"version": base_version, "n_rows_deleted": 0,
-                "dv_file": None}
-    rel = _write_dv_sidecar(spark, table_path, hits)
-    try:
-        _write_commit(spark, table_path, base_version + 1,
-                      {"version": base_version + 1, "op": "delete_mor",
-                       "add": [], "remove": [], "dv_add": rel,
-                       "dv_rows": n})
-    except CommitConflictError:
-        _delete_rel(spark, table_path, rel)  # don't leak the sidecar
-        raise
-    return {"version": base_version + 1, "n_rows_deleted": n,
-            "dv_file": rel}
-
-
+@_pinned_attempt
 def _merge_mor_once(spark: SparkSession, table_path: str,
                     source: DataFrame, keys: list[str],
                     update_set, delete_condition,
@@ -2695,37 +2766,19 @@ def _merge_mor_once(spark: SparkSession, table_path: str,
     not-matched inserts) land as new small files, and NO existing
     file is rewritten — O(changed rows) writes regardless of how many
     gigabytes the touched files hold."""
-    base_version = current_version(spark, table_path)
-    if base_version == 0:
-        raise FileNotFoundError(f"{table_path} has no commit log")
-    files = snapshot_files(spark, table_path, base_version)
-    events = _schema_events(spark, table_path, base_version)
-    dv = _dv_overlay(spark, table_path, base_version)
-    schema = table_schema(spark, table_path, base_version)
-    tagged = _dv_tag(_file_reader(spark, schema, events)
-                     .parquet(*files))
-    if dv is not None:
-        tagged = tagged.join(
-            dv, (tagged["__f"] == dv["__dv_f"])
-            & (tagged["__i"] == dv["__dv_i"]), "left_anti")
-    tgt = _pad_logical(_apply_schema_events(tagged, events), schema)
+    s = _dml_snapshot(spark, table_path)
+    tgt = _pad_logical(
+        _apply_schema_events(_dv_scan(s.reader.parquet(*s.files), s.dv),
+                             s.events), s.schema)
     evolved_json = None
     if schema_evolution:
-        tgt = _evolve_merge_target(spark, table_path, tgt, source)
-        evolved_json = _evolved_schema_json(
-            spark, table_path, source.schema,
-            f"merge_into schema evolution on {table_path}")
+        tgt, evolved_json = _evolve_merge_target(spark, table_path, tgt,
+                                                 source)
     tgt_cols = [c for c in tgt.columns if c not in ("__f", "__i")]
     src = source.select(*tgt_cols)
 
-    joined = tgt.alias("tgt").join(
-        F.broadcast(src.withColumn("__hit", F.lit(1)).alias("src")),
-        keys, "left")
-    is_matched = F.col("src.__hit").isNotNull()
-    if isinstance(delete_condition, str):
-        delete_condition = F.expr(delete_condition)
-    drop = (is_matched & delete_condition) if delete_condition is not None \
-        else F.lit(False)
+    joined, is_matched, drop = _match_source(tgt, src, keys,
+                                             delete_condition)
     # rows a clause MODIFIES: every matched row when updating,
     # only delete-clause hits otherwise — unmodified rows keep their
     # physical position and need no vector entry
@@ -2736,38 +2789,19 @@ def _merge_mor_once(spark: SparkSession, table_path: str,
 
     parts: list[DataFrame] = []
     if update_set is not None and n_mod:
-        out_cols = []
-        for c in tgt_cols:
-            if c in keys:
-                out_cols.append(F.col(f"tgt.{c}").alias(c))
-            elif update_set == "all":
-                out_cols.append(F.col(f"src.{c}").alias(c))
-            elif isinstance(update_set, dict) and c in update_set:
-                expr = update_set[c]
-                if isinstance(expr, str):
-                    expr = F.expr(expr)
-                out_cols.append(expr.alias(c))
-            else:
-                out_cols.append(F.col(f"tgt.{c}").alias(c))
-        parts.append(modified.filter(~drop).select(*out_cols))
+        parts.append(modified.filter(~drop).select(
+            *_set_columns(tgt_cols, update_set, keys, qualified=True)))
     if insert_when_not_matched:
         all_keys = tgt.select(*keys).distinct()
         parts.append(src.join(all_keys, keys, "left_anti"))
 
     adds: list[dict] = []
     if parts:
-        from functools import reduce
-        merged = reduce(DataFrame.unionByName, parts)
+        merged = functools.reduce(DataFrame.unionByName, parts)
         _enforce_constraints(merged, table_constraints(spark, table_path),
                              f"merge_into(mor) on {table_path}")
-        adds = _write_data_files(spark, table_path, merged, keys,
-                                 stat_cols=_table_stat_cols(
-                                     spark, table_path),
-                                 bloom_cols=_table_bloom_cols(
-                                     spark, table_path),
-                                 partition_cols=_table_partition_cols(
-                                     spark, table_path))
-    doc: dict = {"version": base_version + 1, "op": "merge_mor",
+        adds = _write_table_files(spark, table_path, merged, keys)
+    doc: dict = {"version": s.version + 1, "op": "merge_mor",
                  "add": adds, "remove": []}
     if evolved_json is not None:
         doc["schema"] = evolved_json
@@ -2778,24 +2812,11 @@ def _merge_mor_once(spark: SparkSession, table_path: str,
                             F.col("tgt.__i").alias("pos")))
         doc["dv_rows"] = n_mod
     if not adds and not n_mod:
-        return {"version": base_version, "n_rows_modified": 0,
+        return {"version": s.version, "n_rows_modified": 0,
                 "n_files_added": 0, "dv_file": None}
-    try:
-        _write_commit(spark, table_path, base_version + 1, doc)
-    except CommitConflictError:
-        if doc.get("dv_add"):
-            _delete_rel(spark, table_path, doc["dv_add"])
-        raise
-    return {"version": base_version + 1, "n_rows_modified": n_mod,
+    _commit_with_sidecar(spark, table_path, doc)
+    return {"version": s.version + 1, "n_rows_modified": n_mod,
             "n_files_added": len(adds), "dv_file": doc.get("dv_add")}
-
-
-def _delete_rel(spark: SparkSession, table_path: str, rel: str) -> None:
-    """Best-effort delete of a table-relative file (losing-writer
-    cleanup: a sidecar written ahead of a commit that lost the race
-    must not linger as an orphan)."""
-    fileio.file_io(spark, table_path).delete(
-        f"{table_path.rstrip('/')}/{rel}")
 
 
 def _write_dv_sidecar(spark: SparkSession, table_path: str,
@@ -2821,78 +2842,23 @@ def _write_dv_sidecar(spark: SparkSession, table_path: str,
     return rel
 
 
-def _update_mor_once(spark: SparkSession, table_path: str,
-                     condition, update_set: dict,
-                     recon_spec: tuple | None = None) -> dict:
-    base_version = current_version(spark, table_path)
-    if base_version == 0:
-        raise FileNotFoundError(f"{table_path} has no commit log")
-    root = table_path.rstrip("/")
-    files = snapshot_files(spark, table_path, base_version)
-    events = _schema_events(spark, table_path, base_version)
-    dv = _dv_overlay(spark, table_path, base_version)
-    schema = table_schema(spark, table_path, base_version)
-    cands = _recon_candidates(spark, table_path, recon_spec,
-                              base_version)
-    if cands is not None and schema is not None:
-        # structured predicate: scan only stat-surviving files,
-        # pinned at base_version (see _delete_mor_once)
-        if not cands:
-            return {"version": base_version, "n_rows_updated": 0,
-                    "dv_file": None}
-        files = [_abs(root, p) for p in cands]
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    tagged = _dv_tag(_file_reader(spark, schema, events)
-                     .parquet(*files))
-    if dv is not None:
-        tagged = tagged.join(
-            dv, (tagged["__f"] == dv["__dv_f"])
-            & (tagged["__i"] == dv["__dv_i"]), "left_anti")
-    probe = _pad_logical(_apply_schema_events(tagged, events), schema)
-    matched = probe.filter(cond).localCheckpoint(eager=True)
-    n = matched.count()
-    if n == 0:
-        return {"version": base_version, "n_rows_updated": 0,
-                "dv_file": None}
-    logical_cols = [c for c in matched.columns if c not in ("__f", "__i")]
-    out_cols = []
-    for c in logical_cols:
-        if c in update_set:
-            expr = update_set[c]
-            if isinstance(expr, str):
-                expr = F.expr(expr)
-            out_cols.append(expr.alias(c))
-        else:
-            out_cols.append(F.col(c))
-    updated = matched.select(*out_cols)
-    _enforce_constraints(updated, table_constraints(spark, table_path),
-                         f"update_where(mor) on {table_path}")
-    adds = _write_data_files(spark, table_path, updated,
-                             _table_keys(spark, table_path),
-                             stat_cols=_table_stat_cols(
-                                 spark, table_path),
-                             bloom_cols=_table_bloom_cols(
-                                 spark, table_path),
-                             partition_cols=_table_partition_cols(
-                                 spark, table_path))
-    rel = _write_dv_sidecar(
-        spark, table_path,
-        matched.select(F.col("__f").alias("f"),
-                       F.col("__i").alias("pos")))
+def _commit_with_sidecar(spark: SparkSession, table_path: str,
+                         doc: dict) -> None:
+    """Commit a merge-on-read ``doc``. A commit that loses the race
+    deletes the sidecar (``dv_add``) it wrote ahead of the commit —
+    best effort, so the loser leaves no orphan — and re-raises for
+    the retry loop."""
     try:
-        _write_commit(spark, table_path, base_version + 1,
-                      {"version": base_version + 1, "op": "update_mor",
-                       "add": adds, "remove": [],
-                       "dv_add": rel, "dv_rows": n})
+        _write_commit(spark, table_path, doc["version"], doc)
     except CommitConflictError:
-        _delete_rel(spark, table_path, rel)  # don't leak the sidecar
+        if doc.get("dv_add"):
+            fileio.file_io(spark, table_path).delete(
+                f"{table_path.rstrip('/')}/{doc['dv_add']}")
         raise
-    return {"version": base_version + 1, "n_rows_updated": n,
-            "dv_file": rel, "n_files_added": len(adds)}
 
 
 def update_where(spark: SparkSession, table_path: str,
-                 condition: Column | str,
+                 condition: Column | str | dict,
                  update_set: dict[str, Column | str],
                  max_retries: int = 2,
                  mode: str = "cow") -> dict:
@@ -2900,6 +2866,11 @@ def update_where(spark: SparkSession, table_path: str,
     right-hand sides evaluate against the pre-update row (one-pass
     select, standard UPDATE semantics). Retries against a fresh
     snapshot on a commit race.
+
+    ``condition`` may be a structured dict — ``{col: (lo, hi)}``
+    ranges / ``{col: value}`` equalities, ANDed — which additionally
+    prunes the matched-row scan at the FILE level through the log's
+    stats/partition/Bloom lanes (see :func:`_structured_condition`).
 
     ``mode="cow"`` (default) rewrites the touched files; untouched
     files carry by reference.
@@ -2913,23 +2884,8 @@ def update_where(spark: SparkSession, table_path: str,
     purges the vectors as usual."""
     if not update_set:
         raise ValueError("update_where: update_set must be non-empty")
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"update_where: unknown mode {mode!r}")
-    for attempt in range(max_retries + 1):
-        try:
-            cond, spec = _structured_condition(spark, table_path,
-                                               condition)
-            if mode == "mor":
-                return _update_mor_once(spark, table_path, cond,
-                                        dict(update_set),
-                                        recon_spec=spec)
-            return _dml_once(spark, table_path, cond,
-                             dict(update_set), "update",
-                             recon_spec=spec)
-        except CommitConflictError:
-            if attempt == max_retries:
-                raise
-    raise AssertionError("unreachable")
+    return _where_dml(spark, table_path, condition, dict(update_set),
+                      max_retries, mode)
 
 
 def replace_where(spark: SparkSession, table_path: str, df: DataFrame,
@@ -2957,7 +2913,7 @@ def replace_where(spark: SparkSession, table_path: str, df: DataFrame,
     under the table's declared hive/hidden partition layout — a daily
     re-load into a days(ts)-partitioned table touches ~that day's
     directories, regardless of table size."""
-    for attempt in range(max_retries + 1):
+    def _attempt(i):
         # the parsed spec is version-free; the candidate set derives
         # INSIDE _dml_once at its pinned base version, so a commit
         # race re-derives it against the fresh snapshot automatically.
@@ -2967,7 +2923,7 @@ def replace_where(spark: SparkSession, table_path: str, df: DataFrame,
         _guard_retired_names(spark, table_path, df.columns,
                              f"replace_where on {table_path}")
         cond, spec = _structured_condition(spark, table_path, condition)
-        if attempt == 0 and validate:
+        if i == 0 and validate:
             outside = df.filter(~F.coalesce(cond, F.lit(False)))
             if outside.limit(1).count():
                 raise ValueError(
@@ -2977,14 +2933,9 @@ def replace_where(spark: SparkSession, table_path: str, df: DataFrame,
                     "delete half and break idempotence. Widen the "
                     "predicate or pass validate=False to overwrite "
                     "anyway.")
-        try:
-            return _dml_once(spark, table_path, cond, None,
-                             "replace_where", insert_df=df,
-                             recon_spec=spec)
-        except CommitConflictError:
-            if attempt == max_retries:
-                raise
-    raise AssertionError("unreachable")
+        return _dml_once(spark, table_path, cond, None,
+                         "replace_where", insert_df=df, recon_spec=spec)
+    return _commit_retry(max_retries + 1, _attempt)
 
 
 def restore_table(spark: SparkSession, table_path: str,
@@ -3003,7 +2954,8 @@ def restore_table(spark: SparkSession, table_path: str,
                          "as_of_timestamp, exactly one")
     if as_of_timestamp is not None:
         version = version_at_timestamp(spark, table_path, as_of_timestamp)
-    for attempt in range(max_retries + 1):
+
+    def _attempt(_):
         commits = _commits(spark, table_path)
         if not commits:
             raise FileNotFoundError(f"{table_path} has no commit log")
@@ -3073,17 +3025,12 @@ def restore_table(spark: SparkSession, table_path: str,
             doc["add"] = [a for a in target_adds
                           if a["path"] not in cur]
             doc["remove"] = sorted(cur - tgt)
-        try:
-            _write_commit(spark, table_path, base_version + 1, doc)
-        except CommitConflictError:
-            if attempt == max_retries:
-                raise
-            continue
+        _write_commit(spark, table_path, base_version + 1, doc)
         return {"version": base_version + 1,
                 "restored_version": version,
                 "n_files_readded": len(tgt - cur),
                 "n_files_removed": len(cur - tgt)}
-    raise AssertionError("unreachable")
+    return _commit_retry(max_retries + 1, _attempt)
 
 
 def _coerced(stat, probe):
@@ -3106,29 +3053,20 @@ def _merge_once(spark: SparkSession, table_path: str,
                 delete_condition: Column | str | None,
                 insert_when_not_matched: bool,
                 schema_evolution: bool = False) -> dict:
-    base_version = current_version(spark, table_path)
-    if base_version == 0:
-        raise FileNotFoundError(f"{table_path} has no commit log")
-    root = table_path.rstrip("/")
-    files = snapshot_files(spark, table_path, base_version)
     # logical schema so merges work on schema-evolved tables (files
     # written before a column existed read as NULL); RENAME/DROP
     # COLUMN events map the raw vintages onto the logical schema and
     # the deletion-vector overlay hides merge-on-read-deleted rows.
     # Everything (snapshot, events, DVs, stat-pruned candidates) is
-    # pinned at base_version — the version the commit-CAS guards.
-    events = _schema_events(spark, table_path, base_version)
-    dv = _dv_overlay(spark, table_path, base_version)
-    schema = table_schema(spark, table_path, base_version)
-    reader = _file_reader(spark, schema, events)
-    target = _finish_logical(_apply_dv(reader.parquet(*files), dv),
-                             schema, events)
+    # pinned at s.version — the version the commit-CAS guards.
+    s = _dml_snapshot(spark, table_path)
+    root, files, dv = s.root, s.files, s.dv
+    target = _finish_logical(_apply_dv(s.reader.parquet(*files), dv),
+                             s.schema, s.events)
     evolved_json = None
     if schema_evolution:
-        target = _evolve_merge_target(spark, table_path, target, source)
-        evolved_json = _evolved_schema_json(
-            spark, table_path, source.schema,
-            f"merge_into schema evolution on {table_path}")
+        target, evolved_json = _evolve_merge_target(
+            spark, table_path, target, source)
     tgt_cols = target.columns
 
     # source pass: the projected source is materialized exactly once
@@ -3152,7 +3090,7 @@ def _merge_once(spark: SparkSession, table_path: str,
     # small tables, one Spark filter job over the parquet checkpoint's
     # add-action table for big ones (stats never cross to the driver)
     candidates = (pruned_candidate_files(spark, table_path, bounds,
-                                         version=base_version)
+                                         version=s.version)
                   if bounds else [])
     n_stat_pruned = len(files) - len(candidates)
 
@@ -3182,38 +3120,13 @@ def _merge_once(spark: SparkSession, table_path: str,
     if touched:
         tgt_touched = _align_logical(
             _apply_schema_events(
-                _apply_dv(reader.parquet(*touched), dv),
-                events),
+                _apply_dv(s.reader.parquet(*touched), dv),
+                s.events),
             target.schema)
-        # matched marker: a non-null sentinel column, NOT "any source
-        # column non-null" — which would misclassify under nullable
-        # source data
-        joined = tgt_touched.alias("tgt").join(
-            F.broadcast(src.withColumn("__hit", F.lit(1)).alias("src")),
-            keys, "left")
-        is_matched = F.col("src.__hit").isNotNull()
-        if isinstance(delete_condition, str):
-            delete_condition = F.expr(delete_condition)
-        drop = (is_matched & delete_condition) if delete_condition is not None \
-            else F.lit(False)
-        out_cols = []
-        for c in tgt_cols:
-            if c in keys:
-                out_cols.append(F.col(f"tgt.{c}").alias(c))
-            elif update_set == "all":
-                out_cols.append(
-                    F.when(is_matched, F.col(f"src.{c}"))
-                    .otherwise(F.col(f"tgt.{c}")).alias(c))
-            elif isinstance(update_set, dict) and c in update_set:
-                expr = update_set[c]
-                if isinstance(expr, str):
-                    expr = F.expr(expr)
-                out_cols.append(
-                    F.when(is_matched, expr)
-                    .otherwise(F.col(f"tgt.{c}")).alias(c))
-            else:
-                out_cols.append(F.col(f"tgt.{c}").alias(c))
-        parts.append(joined.filter(~drop).select(*out_cols))
+        joined, is_matched, drop = _match_source(tgt_touched, src, keys,
+                                                 delete_condition)
+        parts.append(joined.filter(~drop).select(*_set_columns(
+            tgt_cols, update_set, keys, when=is_matched, qualified=True)))
     if insert_when_not_matched:
         # NOT MATCHED = no live target row carries the key. Every such
         # row is a reconnaissance hit (stat-pruned files are disjoint
@@ -3224,23 +3137,16 @@ def _merge_once(spark: SparkSession, table_path: str,
 
     adds: list[dict] = []
     if parts:
-        from functools import reduce
-        merged = reduce(DataFrame.unionByName, parts)
+        merged = functools.reduce(DataFrame.unionByName, parts)
         _enforce_constraints(merged, table_constraints(spark, table_path),
                              f"merge_into on {table_path}")
-        adds = _write_data_files(spark, table_path, merged, keys,
-                                 stat_cols=_table_stat_cols(
-                                     spark, table_path),
-                                 bloom_cols=_table_bloom_cols(
-                                     spark, table_path),
-                                 partition_cols=_table_partition_cols(
-                                     spark, table_path))
-    doc = {"version": base_version + 1, "op": "merge",
+        adds = _write_table_files(spark, table_path, merged, keys)
+    doc = {"version": s.version + 1, "op": "merge",
            "add": adds, "remove": touched_rel}
     if evolved_json is not None:
         doc["schema"] = evolved_json
-    _write_commit(spark, table_path, base_version + 1, doc)
-    return {"version": base_version + 1,
+    _write_commit(spark, table_path, s.version + 1, doc)
+    return {"version": s.version + 1,
             "n_files_rewritten": len(touched_rel),
             "n_files_carried": len(carried),
             "n_files_added": len(adds),
@@ -3474,8 +3380,7 @@ def compact(spark: SparkSession, table_path: str,
     is untouched — run their own scoped OPTIMIZE (or an unscoped one)
     to purge it.
     """
-    candidates_of: dict = {}
-    for attempt in range(max_retries + 1):
+    def _attempt(_):
         base_version = current_version(spark, table_path)
         if base_version == 0:
             raise FileNotFoundError(f"{table_path} has no commit log")
@@ -3530,20 +3435,14 @@ def compact(spark: SparkSession, table_path: str,
                 # only dead DV entries remain (their files already left
                 # the snapshot): drop the sidecars from the log with a
                 # metadata-only commit so maintenance can reap them
-                try:
-                    _write_commit(spark, table_path, base_version + 1,
-                                  {"version": base_version + 1,
-                                   "op": "compact", "add": [],
-                                   "remove": [], "dv_files": []})
-                except CommitConflictError:
-                    if attempt == max_retries:
-                        raise
-                    continue
+                _write_commit(spark, table_path, base_version + 1,
+                              {"version": base_version + 1,
+                               "op": "compact", "add": [],
+                               "remove": [], "dv_files": []})
                 return {"version": base_version + 1,
                         "n_files_compacted": 0, "n_files_added": 0}
             return {"version": base_version, "n_files_compacted": 0,
                     "n_files_added": 0}
-        candidates_of[attempt] = candidates
         events = _schema_events(spark, table_path)
         schema = table_schema(spark, table_path)
         # declared schema imposed on the candidate scan (or the
@@ -3622,17 +3521,10 @@ def compact(spark: SparkSession, table_path: str,
                 packed = df.repartition(n_out, *pexprs)
             else:
                 packed = df.repartition(n_out)
-        keys = _table_keys(spark, table_path)
-        extra = (list(zorder_by) if zorder_by
-                 else [sort_by] if sort_by else [])
-        adds = _write_data_files(spark, table_path, packed, keys,
-                                 stat_cols=list(dict.fromkeys(
-                                     extra + _table_stat_cols(
-                                         spark, table_path))),
-                                 bloom_cols=_table_bloom_cols(
-                                     spark, table_path),
-                                 partition_cols=_table_partition_cols(
-                                     spark, table_path))
+        adds = _write_table_files(
+            spark, table_path, packed,
+            extra_stat_cols=(list(zorder_by) if zorder_by
+                             else [sort_by] if sort_by else []))
         doc = {"version": base_version + 1, "op": "compact",
                "add": adds, "remove": candidates}
         if dv_live:
@@ -3672,16 +3564,11 @@ def compact(spark: SparkSession, table_path: str,
                 # entries the scoped rewrite just materialized)
                 if survivors:
                     doc["dv_rows_map"] = survivors
-        try:
-            _write_commit(spark, table_path, base_version + 1, doc)
-        except CommitConflictError:
-            if attempt == max_retries:
-                raise
-            continue
+        _write_commit(spark, table_path, base_version + 1, doc)
         return {"version": base_version + 1,
                 "n_files_compacted": len(candidates),
                 "n_files_added": len(adds)}
-    raise AssertionError("unreachable")
+    return _commit_retry(max_retries + 1, _attempt)
 
 
 def snapshot_adds(spark: SparkSession, table_path: str,
@@ -4042,10 +3929,8 @@ def read_changes(spark: SparkSession, table_path: str,
         # rows DV-deleted in range, in files BOTH snapshots share —
         # a file rewritten in range already reports its deletes via
         # the copy-on-write diff below
-        dvn = _dv_frame(spark, root, dv_new_rels)
-        raw = _dv_tag(reader.parquet(*carried))
-        hit = raw.join(dvn, (raw["__f"] == dvn["__dv_f"])
-                       & (raw["__i"] == dvn["__dv_i"]),
+        hit = _dv_join(_dv_tag(reader.parquet(*carried)),
+                       _dv_frame(spark, root, dv_new_rels),
                        "left_semi").drop("__f", "__i")
         mor = (_pad_logical(_apply_schema_events(hit, events), base.schema)
                .select(*out_cols, F.lit("delete").alias("_change_type")))
@@ -4157,7 +4042,8 @@ def analyze_table(spark: SparkSession, table_path: str,
                 "probe's seed cap lakehouse_meta.MAX_BLOOM_SEEDS="
                 f"{meta.MAX_BLOOM_SEEDS}")
     root = table_path.rstrip("/")
-    for attempt in range(max_retries + 1):
+
+    def _attempt(_):
         base = current_version(spark, table_path)
         if base == 0:
             raise FileNotFoundError(f"{table_path} has no commit log")
@@ -4333,14 +4219,10 @@ def analyze_table(spark: SparkSession, table_path: str,
         if bcols:
             doc["bloom_cols"] = sorted(
                 set(_table_bloom_cols(spark, table_path)) | set(bcols))
-        try:
-            _write_commit(spark, table_path, base + 1, doc)
-            return {"version": base + 1, "n_files": len(adds),
-                    "stat_cols": scols, "bloom_cols": bcols}
-        except CommitConflictError:
-            if attempt == max_retries:
-                raise
-    raise AssertionError("unreachable")
+        _write_commit(spark, table_path, base + 1, doc)
+        return {"version": base + 1, "n_files": len(adds),
+                "stat_cols": scols, "bloom_cols": bcols}
+    return _commit_retry(max_retries + 1, _attempt)
 
 
 def expire_snapshots(spark: SparkSession, table_path: str,
@@ -4552,6 +4434,7 @@ def expire_snapshots(spark: SparkSession, table_path: str,
 # Write-audit-publish (WAP) — staged commits gated by validation
 # ---------------------------------------------------------------------------
 
+@_pinned_attempt  # one listing for the declaration set
 def stage_append(spark: SparkSession, table_path: str, df: DataFrame,
                  keys: list[str] | None = None) -> dict:
     """WAP step 1 (WRITE): land ``df`` as immutable data files under
@@ -4575,23 +4458,14 @@ def stage_append(spark: SparkSession, table_path: str, df: DataFrame,
     copy), and only a passing batch becomes part of table history —
     the lakehouse-native home for `operators/validate`'s expectation
     suites."""
-    _pin_snapshot(table_path)  # one listing for the declaration set
-    try:
-        v = current_version(spark, table_path)
-        if v == 0:
-            raise FileNotFoundError(f"{table_path} has no commit log")
-        _guard_retired_names(spark, table_path, df.columns,
-                             f"stage_append on {table_path}")
-        staged_dir = f".staged-{uuid.uuid4().hex}"
-        if keys is None:
-            keys = _table_keys(spark, table_path)
-        adds = _write_data_files(
-            spark, table_path, df, keys or [], subdir=staged_dir,
-            stat_cols=_table_stat_cols(spark, table_path),
-            bloom_cols=_table_bloom_cols(spark, table_path),
-            partition_cols=_table_partition_cols(spark, table_path))
-    finally:
-        _unpin_snapshot(table_path)
+    v = current_version(spark, table_path)
+    if v == 0:
+        raise FileNotFoundError(f"{table_path} has no commit log")
+    _guard_retired_names(spark, table_path, df.columns,
+                         f"stage_append on {table_path}")
+    staged_dir = f".staged-{uuid.uuid4().hex}"
+    adds = _write_table_files(spark, table_path, df, keys,
+                              subdir=staged_dir)
     return {"op": "append", "add": adds, "remove": [],
             "base_version": v, "staged_dir": staged_dir,
             # the staged frame's schema rides the pending payload so
@@ -4683,7 +4557,9 @@ def publish_staged(spark: SparkSession, table_path: str,
                                 for a in final_adds]).schema
                      if final_adds else None)
     final_df = None
-    for _ in range(5):
+
+    def _attempt(_):
+        nonlocal final_df
         v = current_version(spark, table_path)
         # constraint set re-read INSIDE the retry loop: a constraint
         # added concurrently between the audit and the winning commit
@@ -4722,12 +4598,12 @@ def publish_staged(spark: SparkSession, table_path: str,
                "add": final_adds, "remove": pending["remove"]}
         if evolved is not None:
             doc["schema"] = evolved
-        try:
-            _write_commit(spark, table_path, v + 1, doc)
-            return v + 1
-        except CommitConflictError:
-            continue  # a writer landed v+1 first; appends don't conflict
-    raise CommitConflictError(
+        # a writer that lands v+1 first just costs a retry: appends
+        # never conflict on content
+        _write_commit(spark, table_path, v + 1, doc)
+        return v + 1
+    return _commit_retry(
+        5, _attempt,
         f"publish_staged: lost the commit race 5 times on {table_path}")
 
 

@@ -85,24 +85,31 @@ def test_scale_ntile_matches_real_ntile_on_continuous_scores(spark):
     (every value distinct — the shape whose distinct-value window the
     rewrite bounds), in both directions, with NULL scores ranking
     last, and for a negative/fractional value range (floor-bucket
-    monotonicity)."""
+    monotonicity). NaN scores rank after every number, as in ntile's
+    own ordering — not in the [0, 1) bucket floor(NaN) = 0 would put
+    them in. A non-numeric score column refuses."""
     from pyspark.sql import Window as W
     rows = [(i, ((i * 37) % 101) - 50 + (i % 7) / 7.0) for i in range(200)]
     rows += [(900, None), (901, None)]  # NULL scores bucket, not drop
-    df = spark.createDataFrame(rows, "user_id long, score double")
-    n = df.count()
-    t = df.withColumn("_n", F.lit(n))
-    for asc in (True, False):
-        got = {r["user_id"]: r["b"] for r in
-               CA._scale_ntile(t, "score", asc=asc, out_col="b")
-               .collect()}
-        order = (F.col("score").asc_nulls_last() if asc
-                 else F.col("score").desc_nulls_last())
-        want = {r["user_id"]: r["b"] for r in
-                df.withColumn(
-                    "b", F.ntile(5).over(W.orderBy(order, "user_id")))
-                .collect()}
-        assert got == want
+    nan = [(950, float("nan")), (951, float("nan"))]
+    for data in (rows, rows + nan):
+        df = spark.createDataFrame(data, "user_id long, score double")
+        n = df.count()
+        t = df.withColumn("_n", F.lit(n))
+        for asc in (True, False):
+            got = {r["user_id"]: r["b"] for r in
+                   CA._scale_ntile(t, "score", asc=asc, out_col="b")
+                   .collect()}
+            order = (F.col("score").asc_nulls_last() if asc
+                     else F.col("score").desc_nulls_last())
+            want = {r["user_id"]: r["b"] for r in
+                    df.withColumn(
+                        "b", F.ntile(5).over(W.orderBy(order, "user_id")))
+                    .collect()}
+            assert got == want
+    with pytest.raises(ValueError, match="numeric"):
+        CA._scale_ntile(t.withColumn("score", F.col("score").cast("string")),
+                        "score", asc=True, out_col="b")
 
 
 def test_rolling_anomaly_flags_spike_not_steady(spark):

@@ -5,7 +5,8 @@
   -0.0 double keys survive stat pruning and match.
 - ``read_changes`` over a schema widening and over NULL<->value flips.
 - Job-count guards: a MERGE is three passes (source, reconnaissance,
-  rewrite) and ``read_changes`` builds its plan without running a job.
+  rewrite), ``read_changes`` builds its plan without running a job,
+  and every other row-level DML body and OPTIMIZE keeps its count.
 - ``inherit_thread_target`` under pinned-thread mode off.
 - The coalesced change-feed drain (``stream_changes(...,
   coalesce_versions=True)``) and its ledger — the benchmark's ELT path.
@@ -157,6 +158,40 @@ def test_merge_and_change_feed_job_counts(spark, tmp):
     assert mirror_rows == fact_rows
     assert len(fact_rows) == 20500 - len(
         [i for i in range(19500, 20000) if i % 17 == 0])
+
+
+# Spark jobs per call of each row-level DML body and of OPTIMIZE on a
+# 3-file table (copy-on-write: reconnaissance + rewrite; merge-on-read:
+# one checkpointed matched-row scan + post-images + sidecar). A body
+# that starts re-reading its input shows up here.
+_DML_JOB_BOUNDS = {"delete": 7, "update": 5, "replace": 10,
+                   "delete_mor": 4, "update_mor": 6, "merge_mor": 10,
+                   "compact": 9}
+
+
+def test_dml_family_job_counts(spark, tmp):
+    p = f"{tmp}/t"
+    LH.create_table(spark, p, spark.range(0, 3000, numPartitions=3).select(
+        F.col("id").alias("k"), (F.col("id") % 10).alias("v")), ["k"])
+    src = spark.createDataFrame([(20, -1), (5000, 1)], "k long, v long")
+    ops = {
+        "delete": lambda: LH.delete_where(spark, p, "k = 5"),
+        "update": lambda: LH.update_where(spark, p, "k = 6", {"v": "v + 1"}),
+        "replace": lambda: LH.replace_where(spark, p, spark.createDataFrame(
+            [(7, 70)], "k long, v long"), "k = 7"),
+        "delete_mor": lambda: LH.delete_where(spark, p, "k = 8", mode="mor"),
+        "update_mor": lambda: LH.update_where(spark, p, "k = 9",
+                                              {"v": "0"}, mode="mor"),
+        "merge_mor": lambda: LH.merge_into(spark, p, src, ["k"],
+                                           mode="mor"),
+        "compact": lambda: LH.compact(spark, p, target_rows=100_000),
+    }
+    counts = {op: _jobs(spark, fn)[1] for op, fn in ops.items()}
+    assert all(counts[op] <= n for op, n in _DML_JOB_BOUNDS.items()), counts
+    got = {r["k"]: r["v"] for r in LH.read_table(spark, p).collect()}
+    assert (5 not in got and got[6] == 7 and got[7] == 70 and 8 not in got
+            and got[9] == 0 and got[20] == -1 and got[5000] == 1)
+    assert len(got) == 3000 - 2 + 1
 
 
 def test_thread_target_with_pinned_threads_off(spark, tmp, monkeypatch):
